@@ -1,9 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.functions.{TextFns, VectorFns}
 import graft.operators.{Backup, Ingest, VectorSearch}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType,
+  StructField, StructType}
 
 /**
  * Knobs mirroring the reference's `config.yml` surface: chunking
@@ -261,7 +265,9 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
    * Execute a read verb snapshot-consistently against concurrent mutators:
    * `eng.served { eng.search(qs).collect() }`. The body must both CREATE
    * the frame and run its action inside (a frame created outside holds a
-   * file listing a concurrent rewrite may have already invalidated).
+   * file listing a concurrent rewrite may have already invalidated). The
+   * top-k verbs ([[search]], [[hybridSearch]], …) rank and hydrate inside
+   * the call and return a local relation, so the call is the snapshot.
    * Read-your-writes under concurrency is `eng.updateIncremental()` (which
    * takes the write side) followed by a served read — [[searchAt]]'s
    * Strong level spelled as two steps. Mutating verbs REJECT being called
@@ -1532,9 +1538,7 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
           // no-torn-serving contract.
           val f = fingerprintFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
           f.delete(fingerprintFile, false)
-          val idxF = scala.concurrent.Future {
-            writeIndexRows(assigned.drop("cell"), "append")
-          }(Engine.sideEC)
+          val idxF = sideJob(writeIndexRows(assigned.drop("cell"), "append"))
           // keep the range-search cell bounds SOUND under the append: an
           // appended chunk farther from its centroid than any existing
           // member would widen the cell's angular radius. The batch's
@@ -1543,7 +1547,7 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
           // scans); the merge with the stored minima is nlist rows of
           // driver arithmetic.
           val bObs = org.apache.spark.sql.Observation()
-          val cellsF = scala.concurrent.Future {
+          val cellsF = sideJob {
             val cellMins = cents.indices.map(c =>
               min(when(col("cell") === c,
                 VectorFns.cosineSim(col("vec"), typedLit(cents(c).toSeq))))
@@ -1583,14 +1587,19 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
               VectorSearch.appendBin(
                 assigned.select(col("doc_id"), col("chunk_id"), col("cell"), col("vec")),
                 "vec", cfg.embedDim, ivfPath)
-          }(Engine.sideEC)
-          val lexErr = try { maintainLexIfStale(); None }
-            catch { case scala.util.control.NonFatal(e) => Some(e) }
-          scala.concurrent.Await.result(idxF, scala.concurrent.duration.Duration.Inf)
-          invalidateIvf()
-          stampSealed() // the index append landed: store files covered again
-          scala.concurrent.Await.result(cellsF, scala.concurrent.duration.Duration.Inf)
-          lexErr.foreach(throw _)
+          }
+          // every side is awaited whatever fails: no write outlives the
+          // verb, and the first failure is rethrown with the rest suppressed
+          def await(f: scala.concurrent.Future[Unit]): Unit =
+            scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
+          val errs = Seq(
+            scala.util.Try(maintainLexIfStale()),
+            scala.util.Try(await(idxF)).map { _ =>
+              invalidateIvf()
+              stampSealed() // the index append landed: store files covered again
+            },
+            scala.util.Try(await(cellsF))).flatMap(_.failed.toOption)
+          errs.headOption.foreach { e => errs.tail.foreach(e.addSuppressed); throw e }
           // the layout now reflects the post-append index (any side died
           // midway → the stamp stays dropped → next ivfIndex() rebuilds;
           // stamping LAST keeps the crash window safe)
@@ -1599,6 +1608,18 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
         }
       }
     }
+  }
+
+  /** `body` on [[Engine.sideEC]] under the caller's Spark job group (a pool
+    * thread otherwise keeps the group of the call that created it). */
+  private def sideJob(body: => Unit): scala.concurrent.Future[Unit] = {
+    val sc = spark.sparkContext
+    val group = sc.getLocalProperty("spark.jobGroup.id")
+    val desc = sc.getLocalProperty("spark.job.description")
+    scala.concurrent.Future {
+      if (group == null) sc.clearJobGroup() else sc.setJobGroup(group, desc)
+      body
+    }(Engine.sideEC)
   }
 
   /** Lexical-layout sibling of the extend path: a no-op unless a lexical
@@ -1621,8 +1642,8 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
    * exponent is the bit length (`bin()`), exact and engine-portable; the
    * fraction interpolates linearly within the octave in basis points.
    */
-  private[graft] def lexicalRank(queries: Seq[String], kPool: Int,
-                                 eligible: Option[DataFrame] = None): DataFrame = {
+  private[graft] def lexicalScores(queries: Seq[String],
+                                   eligible: Option[DataFrame] = None): DataFrame = {
     ensureLex()
     import spark.implicits._
     val qterms = queries.zipWithIndex.flatMap { case (q, i) =>
@@ -1633,11 +1654,9 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
     val tToks = st.getLong(st.fieldIndex("t_toks"))
     val terms = queries.flatMap(analyzeTerms).distinct
     val buckets = terms.map(graft.operators.InvertedIndex.bucketOfTerm).distinct
-    val posts = graft.util.FastParquet.read(spark, s"$lexPath/postings")
+    val posts = lexPostings()
       .filter(col("tb").isInCollection(buckets) && col("tok").isInCollection(terms))
     val dfT = posts.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val wl = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("bm25_bp").desc, col("doc_id").asc)
     posts.join(broadcast(qterms), Seq("tok"))
       .join(broadcast(dfT), Seq("tok"))
       .withColumn("s_k", expr(s"(1024 * (2 * cast($nDocs as bigint) + 2)) DIV (2*df + 1)"))
@@ -1658,10 +1677,61 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
       // rank slot): doc-count-sized frame, delta-sized broadcast anti join
       .transform(d => maskedIds().fold(d)(x =>
         d.join(broadcast(x), Seq("doc_id"), "left_anti")))
-      .withColumn("lex_rank", row_number().over(wl))
-      .filter(col("lex_rank") <= kPool)
-      .select(col("query_id"), col("doc_id"),
-        col("lex_rank").cast("long").as("lex_rank"), col("bm25_bp"))
+  }
+
+  /** Each query's top-`kPool` documents by BM25 ([[lexicalScores]]). */
+  private def lexicalTopK(queries: Seq[String], kPool: Int,
+                          eligible: Option[DataFrame] = None): Map[Long, Array[(Long, Double)]] =
+    VectorSearch.collectTopK(lexicalScores(queries, eligible), kPool, scoreCol = "bm25_bp")
+
+  /** Reciprocal-rank fusion (k=60) of query `q`'s collected pools, in Long
+    * arithmetic: a doc's ppm sums `10⁶ DIV (60 + rank)` over the pools that
+    * rank it. The fused top-`k` as (doc, rank per pool — 0 when absent,
+    * ppm), ppm descending, ties by doc_id. */
+  private def rrfFuse(pools: Seq[Map[Long, Array[(Long, Double)]]], q: Long,
+                      k: Int): Seq[(Long, Seq[Long], Long)] = {
+    val ranks = pools.map(p => p.getOrElse(q, Array.empty[(Long, Double)])
+      .zipWithIndex.map { case ((d, _), i) => d -> (i + 1L) }.toMap)
+    ranks.flatMap(_.keys).distinct.map { d =>
+      val rs = ranks.map(_.getOrElse(d, 0L))
+      (d, rs, rs.filter(_ > 0).map(r => 1000000L / (60 + r)).sum)
+    }.sortBy(h => (-h._3, h._1)).take(k)
+  }
+
+  /** Milvus's WeightedRanker over one query's pools of integer scores: each
+    * pool min-max normalised to basis points (`(10000 × (v − mn)) DIV
+    * (mx − mn)`, 10000 for a one-member or tied pool), a doc's fused score
+    * `Σ wᵢ·normᵢ DIV 10000`. The top-`k` as (doc, norm per pool — None when
+    * absent, fused), fused descending, ties by doc_id. */
+  private def weightedFuse(pools: Seq[Array[(Long, Long)]], weights: Seq[Long],
+                           k: Int): Seq[(Long, Seq[Option[Long]], Long)] = {
+    val norms = pools.map { p =>
+      val (mn, mx) = (p.map(_._2).minOption.getOrElse(0L), p.map(_._2).maxOption.getOrElse(0L))
+      p.map { case (d, v) => d -> (if (mx > mn) 10000L * (v - mn) / (mx - mn) else 10000L) }.toMap
+    }
+    norms.flatMap(_.keys).distinct.map { d =>
+      val ns = norms.map(_.get(d))
+      (d, ns, ns.zip(weights).collect { case (Some(n), w) => w * n }.sum / 10000L)
+    }.sortBy(h => (-h._3, h._1)).take(k)
+  }
+
+  /** A pool's cosine scores as WeightedRanker integers: floor(score·10⁴ + ½). */
+  private def vecBp(pool: Map[Long, Array[(Long, Double)]], q: Long): Array[(Long, Long)] =
+    pool.getOrElse(q, Array.empty[(Long, Double)])
+      .map { case (d, sc) => (d, math.floor(sc * 10000 + 0.5).toLong) }
+
+  /** Hydrated RRF hits: (query_id, query, doc_id, one rank column per named
+    * pool, rrf_ppm, rank, preview). */
+  private def fusedHits(queries: Seq[String],
+                        pools: Seq[(String, Map[Long, Array[(Long, Double)]])]): DataFrame = {
+    val hits = queries.indices.flatMap { q =>
+      rrfFuse(pools.map(_._2), q.toLong, cfg.limit).zipWithIndex.map { case ((d, ranks, ppm), i) =>
+        Row.fromSeq(Seq(q.toLong, queries(q), d) ++ ranks ++ Seq[Any](ppm, i + 1))
+      }
+    }
+    hydrate(hits, Engine.schemaOf(Seq("query_id" -> LongType, "query" -> StringType,
+      "doc_id" -> LongType) ++ pools.map(_._1 -> LongType) ++
+      Seq("rrf_ppm" -> LongType, "rank" -> IntegerType): _*))
   }
 
   /** Round-robin width pin for narrow CPU-per-row stages whose input
@@ -2326,7 +2396,7 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
   /** Embed a query batch driver-side with the SAME model the index was
     * built with (vdb.py:92-95 embeds queries through the one model handle;
     * a query batch is tiny, so the driver pays one `embedBatch`). */
-  private def queryDf(queries: Seq[String]): DataFrame = {
+  private[graft] def queryDf(queries: Seq[String]): DataFrame = {
     import spark.implicits._
     val vecs = model.embedBatch(queries)
     queries.zip(vecs).zipWithIndex
@@ -2454,10 +2524,13 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
    * small scale); at/above it, the memoized [[ivfIndex]]'s `cfg.nprobe`
    * probed cells (the path that survives corpus scale — with the
    * reference's own nprobe = nlist both paths are exhaustive and agree).
+   * Two phases run inside the call: ranking collects each query's top-k
+   * ([[vectorScores]]), then one by-id store scan hydrates it
+   * ([[hydrate]]). The result is a materialised local relation.
    */
   def search(queries: Seq[String]): DataFrame = {
     admit()
-    searchImpl(queryDf(queries), None)
+    searchImpl(queries)
   }
 
   /**
@@ -2509,15 +2582,13 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
    */
   def searchGrowing(queries: Seq[String], ignoreGrowing: Boolean = false): DataFrame = {
     admit()
-    val qdf = queryDf(queries)
-    if (ignoreGrowing) return searchImpl(qdf, None)
+    if (ignoreGrowing) return searchImpl(queries)
     require(indexExists,
       "searchGrowing requires a sealed index (run update() once); Milvus " +
         "cannot search an unindexed collection either")
-    val gScored = chunkEmbed(growingDocs()).crossJoin(broadcast(qdf))
-      .withColumn("score", round(VectorFns.cosineSim(col("vec"), col("query_vec")), 4))
-      .select(col("query_id"), col("query"), col("doc_id"), col("score"))
-    searchImpl(qdf, None, growing = Some(gScored))
+    searchImpl(queries, growing = Some(qdf => chunkEmbed(growingDocs())
+      .crossJoin(broadcast(qdf))
+      .withColumn("score", round(VectorFns.cosineSim(col("vec"), col("query_vec")), 4))))
   }
 
   /** Store documents the index does not cover yet (the growing segments),
@@ -2595,7 +2666,7 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
   def searchWhere(queries: Seq[String], pred: Column): DataFrame = {
     admit()
     val eligible = store().filter(pred).select(col("doc_id")).distinct()
-    searchImpl(queryDf(queries), Some(eligible))
+    searchImpl(queries, Some(eligible))
   }
 
   /**
@@ -2626,8 +2697,7 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
     require(cfg.partitionKey.nonEmpty,
       "searchPartitions requires cfg.partitionKey (Milvus partition_key_field)")
     partitions.foreach(admitTenant) // per-tenant buckets (Milvus partition quota)
-    searchImpl(queryDf(queries), None,
-      Some(col(cfg.partitionKey).isin(partitions: _*)))
+    searchImpl(queries, scope = Some(col(cfg.partitionKey).isin(partitions: _*)))
   }
 
   /** Chunk-level scoring against the broadcast query side through the
@@ -2664,7 +2734,7 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
           .withColumn("score", round(VectorFns.cosineSim(col("vec"), col("query_vec")), 4))
       else if (cfg.indexType == "IVF_PQ") {
         val idx = ivfIndex()
-        val cand = VectorSearch.pqAdcCandidates(gate(scoped(pqCodes())), idx.centroids, qdf,
+        val cand = VectorSearch.pqAdcCandidates(gate(scoped(pqCodes())), idx.centroidArray, qdf,
           cfg.pqRerank, cfg.embedDim, cfg.pqM, cfg.pqCodes, cfg.pqSeed,
           cfg.nprobe, idCol = "chunk_id")
         index().join(broadcast(cand), Seq("chunk_id"))
@@ -2676,7 +2746,8 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
         // reconstructions (asymmetric, q145's scoring) — never the full
         // vectors, which IVF_SQ8 serving does not read at all
         val idx = ivfIndex()
-        gate(scoped(VectorSearch.sq8ScoredCandidates(spark, ivfPath, idx.centroids, qdf, cfg.nprobe)))
+        gate(scoped(VectorSearch.sq8ScoredCandidates(spark, ivfPath, idx.centroidArray, qdf,
+          cfg.nprobe)))
       }
       else if (cfg.indexType == "IVF_RABITQ") {
         // binary-quantization tier (Milvus 2.6 RaBitQ): probe-pruned
@@ -2687,7 +2758,7 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
         // eligible ones out of the rerank pool.
         val idx = ivfIndex()
         val cand = VectorSearch.binHammingCandidates(gate(scoped(binCodes())),
-          idx.centroids, qdf, cfg.pqRerank, cfg.embedDim, cfg.nprobe,
+          idx.centroidArray, qdf, cfg.pqRerank, cfg.embedDim, cfg.nprobe,
           idCol = "chunk_id")
         index().join(broadcast(cand), Seq("chunk_id"))
           .join(broadcast(qdf), Seq("query_id"))
@@ -2708,7 +2779,7 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
   def searchPage(queries: Seq[String], offset: Int, pageSize: Int): DataFrame = {
     require(offset >= 0 && pageSize > 0, s"bad page: offset=$offset size=$pageSize")
     admit()
-    searchImpl(queryDf(queries), None, None, offset, pageSize)
+    searchImpl(queries, offset = offset, pageSize = pageSize)
   }
 
   /**
@@ -2733,12 +2804,11 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
    * no page re-ranks its prefix (where offset paging pays O(p·batch) at
    * page p — the [[searchPage]] shape).
    *
-   * Previews hydrate PER PAGE through the same broadcast-hits join
-   * [[searchImpl]] uses (a batch-sized broadcast against the column-pruned
-   * store scan) — the ranking itself is snapshot-stable (it reads the
+   * Previews hydrate PER PAGE through the by-id scan [[searchImpl]] uses
+   * ([[hydrate]]) — the ranking itself is snapshot-stable (it reads the
    * pin), while a doc DELETED mid-drain hydrates no preview row on later
    * pages, the Milvus iterator contract for concurrent mutation; pages
-   * are pinned at cut time. `buckets` <= 0 picks the session shuffle
+   * are materialised at cut time. `buckets` <= 0 picks the session shuffle
    * width; size it ~rankedDocs/batchSize at corpus scale so one page reads
    * ~one bucket.
    */
@@ -2770,20 +2840,16 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
         val cumStart = starts(bcounts.indexWhere(b => needed.contains(b._1)))
         val pruned = org.apache.spark.rdd.PartitionPruningRDD.create(
           rdd, pid => needed.contains(pid))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("query_id"))
+        // ranks (cumStart, hi] of the pruned span, on the driver
+        val span = spark.createDataFrame(pruned, schema)
           .orderBy(col("score").desc, col("doc_id").asc)
-        val hits = spark.createDataFrame(pruned, schema)
-          .orderBy(col("score").desc, col("doc_id").asc)
-          .limit((hi - cumStart).toInt) // ranks (cumStart, hi] of the pruned span
-          .withColumn("rank", (row_number().over(w) + lit(cumStart)).cast("int"))
-          .filter(col("rank") > drained)
-        store().select(col("doc_id"), substring(col("text"), 1, 200).as("preview"))
-          .join(broadcast(hits), Seq("doc_id"))
-          .select(col("query_id"), col("query"), col("doc_id"), col("score"),
-            col("rank"), col("preview"))
-          .orderBy(col("rank"))
-          .localCheckpoint(true) // pin: page snapshot under concurrent mutation
+          .limit((hi - cumStart).toInt)
+          .collect()
+        val hits = span.zipWithIndex.collect {
+          case (r, i) if cumStart + i + 1 > drained =>
+            Row.fromSeq(r.toSeq :+ (cumStart + i + 1).toInt)
+        }
+        hydrate(hits.toSeq, schema.add("rank", IntegerType))
       }
     }
   }
@@ -2799,46 +2865,82 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
       .repartitionByRange(buckets, col("score").desc, col("doc_id").asc)
       .localCheckpoint(true)
 
-  private def searchImpl(qdf: DataFrame,
-                         eligible: Option[DataFrame],
+  private def searchImpl(queries: Seq[String],
+                         eligible: Option[DataFrame] = None,
                          scope: Option[Column] = None,
                          offset: Int = 0,
                          pageSize: Int = 0,
                          outputFields: Seq[String] = Nil,
-                         growing: Option[DataFrame] = None): DataFrame = {
+                         growing: Option[DataFrame => DataFrame] = None): DataFrame = {
     val limit = if (pageSize > 0) pageSize else cfg.limit
-    // per-parent best-hit reduce (vdb.py:104-110) and top-k per query.
-    // [[searchGrowing]]'s on-the-fly-scored growing chunks union in BELOW
-    // the reduce: a doc double-scored by a stale manifest (sealed + growing
-    // overlap) collapses to one row with the same max — overlap is
-    // harmless, only a coverage HOLE would be wrong (invalidateSealed's
-    // contract)
-    val sealedScored = scoredChunks(qdf, eligible, scope)
-      .select(col("query_id"), col("query"), col("doc_id"), col("score"))
-    val best = growing.fold(sealedScored)(g => sealedScored.unionByName(g))
-      .groupBy(col("query_id"), col("query"), col("doc_id"))
-      .agg(max(col("score")).as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    val topk = best
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") > offset && col("rank") <= offset + limit)
-    // hydration join (vdb.py:113-119): hits side is tiny ⇒ broadcast. A
-    // tenant-scoped search ([[searchPartitions]]) carries its scope onto the
-    // hydration scan too: on a partition-keyed STORE the predicate is a
-    // PartitionFilter, so hydration never lists other tenants' directories
-    val hydration = scope.fold(store())(p => store().filter(p))
-    // the caller-chosen projection (Milvus output_fields) — default the
-    // text preview; either way only the requested columns reach the
-    // hydration scan's ReadSchema
-    val fields =
-      if (outputFields.isEmpty) Seq(substring(col("text"), 1, 200).as("preview"))
-      else outputFields.map(col(_))
-    hydration.join(broadcast(topk), "doc_id")
-      .select(Seq(col("query_id"), col("query"), col("doc_id"), col("score"),
-        col("rank")) ++ fields: _*)
-      .orderBy(col("query_id"), col("rank"))
+    val qdf = queryDf(queries)
+    val top = VectorSearch.collectTopK(
+      vectorScores(qdf, eligible, scope, growing.map(_(qdf))), offset + limit)
+    // a tenant-scoped search ([[searchPartitions]]) carries its scope onto
+    // the hydration scan too: on a partition-keyed STORE the predicate is a
+    // PartitionFilter, so hydration never lists other tenants' directories.
+    // The caller-chosen projection (Milvus output_fields) defaults to the
+    // text preview; either way only the requested columns are read
+    val fields = if (outputFields.isEmpty) Seq(preview) else outputFields.map(col(_))
+    hydrate(hitRows(queries, top, offset), Engine.HitSchema, fields, scope)
+  }
+
+  // Two-phase serving reads, the reference's shape (vdb.py:88-119: ANN
+  // top-k, then a by-id fetch). A read that ends in a per-query top-k
+  // collects that top-k ([[VectorSearch.collectTopK]]; fusions combine the
+  // pools on the driver in Long arithmetic), then hydrates the ids with one
+  // store scan ([[hydrate]]) — both inside the call.
+
+  /** The vector ranking frame: `(query_id, doc_id, score)` per scored chunk
+    * ([[scoredChunks]]: probe, eligibility, scope and masks all below the
+    * top-k cut). [[searchGrowing]]'s growing chunks union in; a doc scored
+    * twice by a stale manifest just keeps its best score. */
+  private[graft] def vectorScores(qdf: DataFrame, eligible: Option[DataFrame] = None,
+                                  scope: Option[Column] = None,
+                                  growing: Option[DataFrame] = None): DataFrame = {
+    def slim(df: DataFrame) = df.select(col("query_id"), col("doc_id"), col("score"))
+    val sealedScored = slim(scoredChunks(qdf, eligible, scope))
+    growing.fold(sealedScored)(g => sealedScored.unionByName(slim(g)))
+  }
+
+  /** Each query's top-`k` documents by best chunk score ([[vectorScores]]). */
+  private def vectorTopK(qdf: DataFrame, k: Int,
+                         eligible: Option[DataFrame] = None): Map[Long, Array[(Long, Double)]] =
+    VectorSearch.collectTopK(vectorScores(qdf, eligible), k)
+
+  /** The default hydrated column: the text preview. */
+  private def preview: Column = substring(col("text"), 1, 200).as("preview")
+
+  /** `(query_id, query, doc_id, score, rank)` rows of a collected top-k,
+    * ranks above `offset` only, in (query_id, rank) order. */
+  private def hitRows(queries: Seq[String], top: Map[Long, Array[(Long, Double)]],
+                      offset: Int = 0, score: Double => Any = identity): Seq[Row] =
+    queries.indices.flatMap { q =>
+      top.getOrElse(q.toLong, Array.empty[(Long, Double)]).zipWithIndex.drop(offset)
+        .map { case ((d, sc), i) => Row(q.toLong, queries(q), d, score(sc), i + 1) }
+    }
+
+  /** The hydration scan: the store read once, `doc_id IN (ids)` and only
+    * `fields` pushed to the scan, plus the tenant `scope` when set. */
+  private[graft] def hydrationScan(ids: Seq[Long], fields: Seq[Column],
+                                   scope: Option[Column] = None): DataFrame =
+    scope.fold(store())(p => store().filter(p))
+      .filter(col("doc_id").isInCollection(ids))
+      .select(col("doc_id").cast("long") +: fields: _*)
+
+  /** The hydration phase: every hit row, in order, with `fields` of its
+    * document appended ([[hydrationScan]]; a hit whose document left the
+    * store drops out). A local relation: no sort or sampling pass. */
+  private def hydrate(hits: Seq[Row], schema: StructType,
+                      fields: Seq[Column] = Seq(preview),
+                      scope: Option[Column] = None): DataFrame = {
+    val di = schema.fieldIndex("doc_id")
+    val scan = hydrationScan(hits.map(_.getLong(di)).distinct, fields, scope)
+    val docs =
+      if (hits.isEmpty) Map.empty[Long, Seq[Any]]
+      else scan.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    val rows = hits.flatMap(h => docs.get(h.getLong(di)).map(f => Row.fromSeq(h.toSeq ++ f)))
+    spark.createDataFrame(rows.asJava, StructType(schema.fields ++ scan.schema.fields.tail))
   }
 
   /**
@@ -2853,7 +2955,7 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
   def searchFields(queries: Seq[String], outputFields: Seq[String]): DataFrame = {
     require(outputFields.nonEmpty, "searchFields needs at least one output field")
     admit()
-    searchImpl(queryDf(queries), None, None, 0, 0, outputFields)
+    searchImpl(queries, outputFields = outputFields)
   }
 
   /**
@@ -2883,9 +2985,8 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
     require(scale > 0, s"decay scale must be positive, got $scale")
     require(decayOffset >= 0, s"decay offset must be non-negative, got $decayOffset")
     admit()
-    val qdf = queryDf(queries)
-    val best = scoredChunks(qdf, None)
-      .groupBy(col("query_id"), col("query"), col("doc_id"))
+    val best = vectorScores(queryDf(queries))
+      .groupBy(col("query_id"), col("doc_id"))
       .agg(max(col("score")).as("__vscore"))
     val withX = best.join(
       activeStore().select(col("doc_id"), col(field).cast("double").as("__x")),
@@ -2894,17 +2995,7 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
       (lit(scale) - greatest(abs(col("__x") - lit(origin)) - lit(decayOffset),
         lit(0.0))) / lit(scale))
     val rescored = withX.withColumn("score", round(col("__vscore") * decay, 4))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    val topk = rescored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= cfg.limit)
-      .select(col("query_id"), col("query"), col("doc_id"), col("score"), col("rank"))
-    store().join(broadcast(topk), "doc_id")
-      .select(col("query_id"), col("query"), col("doc_id"), col("score"),
-        col("rank"), substring(col("text"), 1, 200).as("preview"))
-      .orderBy(col("query_id"), col("rank"))
+    hydrate(hitRows(queries, VectorSearch.collectTopK(rescored, cfg.limit)), Engine.HitSchema)
   }
 
   /**
@@ -2934,6 +3025,14 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
                     groupSize: Int = 1, strict: Boolean = true): DataFrame = {
     require(groupSize >= 1, s"bad group_size $groupSize")
     admit()
+    val ranked = groupedRanking(queries, groupField, groupSize, strict)
+    hydrate(ranked.collect().toSeq, ranked.schema)
+  }
+
+  /** [[searchGrouped]]'s ranking frame: `(query_id, query, groupField,
+    * doc_id, score, rank)` in (query_id, rank) order, before hydration. */
+  private[graft] def groupedRanking(queries: Seq[String], groupField: String,
+                                    groupSize: Int, strict: Boolean): DataFrame = {
     val qdf = queryDf(queries)
     val sc = scoredChunks(qdf, None)
     val carried = cfg.partitionKey.nonEmpty && cfg.partitionKey == groupField
@@ -2974,11 +3073,10 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
     val wf = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("grank").asc, col("gr").asc)
-    val topg = repr.join(broadcast(leaders), Seq("query_id", groupField))
+    repr.join(broadcast(leaders), Seq("query_id", groupField))
       .withColumn("rank", row_number().over(wf))
-    store().select(col("doc_id"), col("text")).join(broadcast(topg), "doc_id")
       .select(col("query_id"), col("query"), col(groupField), col("doc_id"),
-        col("score"), col("rank"), substring(col("text"), 1, 200).as("preview"))
+        col("score"), col("rank"))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -3016,11 +3114,9 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
    * share postings, df and rank slots. The optional `|len:<min>:<max>`
    * suffix (Milvus's `length` token filter) drops out-of-range tokens
    * LAST, on both sides. Validated eagerly: an unknown analyzer must
-   * fail the verb, not silently serve standard.
+   * fail the verb, not silently serve standard. This is the analyzed
+   * token stream of a text column (codegen'd: split + filter).
    */
-  private def requireAnalyzer(): Unit = { Engine.parseAnalyzer(cfg.analyzer); () }
-
-  /** Analyzed token stream of a text column (codegen'd: split + filter). */
   private def analyzeCol(text: Column): Column = {
     val (base, len) = Engine.parseAnalyzer(cfg.analyzer)
     val toks = TextFns.tokens(lower(text))
@@ -3087,7 +3183,7 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
     // the build plan (the pre-r15 spelling analyzed the corpus twice: once
     // for the dl aggregate, once for the postings aggregate, then joined).
     val toks = widen(store())
-      .select(col("doc_id"), analyzeCol(col("text")).as("__toks"))
+      .select(col("doc_id").cast("long").as("doc_id"), analyzeCol(col("text")).as("__toks"))
       .select(col("doc_id"), size(col("__toks")).cast("long").as("dl"),
         explode(col("__toks")).as("tok"))
     val posts = toks.groupBy(col("doc_id"), col("tok"))
@@ -3097,7 +3193,7 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
       .write.mode("overwrite").partitionBy("tb").parquet(s"$lexPath/postings")
     // coverage table: column-pruned read of the just-written postings
     // (doc_id, dl only — row-group column slices, never the token bytes)
-    val dl = graft.util.FastParquet.read(spark, s"$lexPath/postings")
+    val dl = lexPostings()
       .select(col("doc_id"), col("dl")).groupBy(col("doc_id"))
       .agg(min(col("dl")).as("dl"))
     dl.write.mode("overwrite").parquet(s"$lexPath/doclens")
@@ -3112,6 +3208,11 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
       .delete(lexMarkerFile, false)
     writeStamp(lexStampFile, lexFingerprint())
   }
+
+  /** The persisted postings, schema given: a corpus with zero analysed
+    * tokens writes no postings file, and must still serve. */
+  private def lexPostings(): DataFrame =
+    spark.read.schema(Engine.LexPostingsSchema).parquet(s"$lexPath/postings")
 
   /** Intent marker for [[extendLex]]'s append window: appends to three
     * layout pieces cannot be atomic together, and a RETRY of a half-applied
@@ -3148,7 +3249,7 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
     // coverage rows + delta stats derive from the pin — the pre-r15
     // spelling re-analyzed the delta a second time for the postings side
     val tfs = widen(fresh)
-      .select(col("doc_id"), analyzeCol(col("text")).as("__toks"))
+      .select(col("doc_id").cast("long").as("doc_id"), analyzeCol(col("text")).as("__toks"))
       .select(col("doc_id"), size(col("__toks")).cast("long").as("dl"),
         explode(col("__toks")).as("tok"))
       .groupBy(col("doc_id"), col("tok"))
@@ -3192,14 +3293,19 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
    */
   def searchTextMatch(queries: Seq[String], matchText: String): DataFrame = {
     admit()
+    searchImpl(queries, Some(textMatchEligible(matchText)))
+  }
+
+  /** [[searchTextMatch]]'s eligible doc_ids: the match terms' postings,
+    * read from their token-bucket directories only. */
+  private[graft] def textMatchEligible(matchText: String): DataFrame = {
     ensureLex()
     val terms = analyzeTerms(matchText).distinct
     require(terms.nonEmpty, "TEXT_MATCH needs at least one term")
     val buckets = terms.map(graft.operators.InvertedIndex.bucketOfTerm).distinct
-    val eligible = graft.util.FastParquet.read(spark, s"$lexPath/postings")
+    lexPostings()
       .filter(col("tb").isInCollection(buckets) && col("tok").isInCollection(terms))
       .select(col("doc_id")).distinct()
-    searchImpl(queryDf(queries), Some(eligible))
   }
 
   /**
@@ -3252,7 +3358,7 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
     require(terms.nonEmpty, "PHRASE_MATCH needs at least one term")
     val distinctTerms = terms.distinct
     val buckets = distinctTerms.map(graft.operators.InvertedIndex.bucketOfTerm).distinct
-    val cand = graft.util.FastParquet.read(spark, s"$lexPath/postings")
+    val cand = lexPostings()
       .filter(col("tb").isInCollection(buckets) && col("tok").isInCollection(distinctTerms))
       .groupBy(col("doc_id"))
       .agg(count_distinct(col("tok")).as("__nt"))
@@ -3301,8 +3407,7 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
     // textmatch ladder's 100× rung vs 0.1 MB / ~3 s hinted.
     // searchTextMatch needs no hint: its eligible frame is a plain
     // pruned parquet read whose stats the planner already sizes small.
-    searchImpl(queryDf(queries),
-      Some(if (hintable) broadcast(verified) else verified))
+    searchImpl(queries, Some(if (hintable) broadcast(verified) else verified))
   }
 
   /**
@@ -3352,22 +3457,16 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
    */
   def searchSparse(queries: Seq[String], k: Int = 0): DataFrame = {
     admit()
-    import spark.implicits._
-    val lim = if (k > 0) k else cfg.limit
-    val qdf0 = queries.zipWithIndex.map { case (q, i) => (i.toLong, q) }
-      .toDF("query_id", "query")
-    val top = sparseRank(queries, lim)
-    store().join(broadcast(top), "doc_id")
-      .join(broadcast(qdf0), Seq("query_id"))
-      .select(col("query_id"), col("query"), col("doc_id"), col("score_bp"),
-        col("rank"), substring(col("text"), 1, 200).as("preview"))
-      .orderBy(col("query_id"), col("rank"))
+    val top = VectorSearch.collectTopK(sparseScores(queries), if (k > 0) k else cfg.limit,
+      scoreCol = "score_bp")
+    hydrate(hitRows(queries, top, score = _.toLong),
+      StructType(Engine.HitSchema.fields.updated(3, StructField("score_bp", LongType))))
   }
 
-  /** [[searchSparse]]'s ranking stage, factored so the multi-request
-    * fusion ([[hybridSearchMulti]]) can consume the sparse pool without
-    * the hydration: (query_id, doc_id, score_bp, rank ≤ kPool). */
-  private def sparseRank(queries: Seq[String], kPool: Int): DataFrame = {
+  /** [[searchSparse]]'s ranking frame, shared with the multi-request
+    * fusion ([[hybridSearchMulti]]): (query_id, doc_id, score_bp) per
+    * matched unmasked doc. */
+  private[graft] def sparseScores(queries: Seq[String]): DataFrame = {
     ensureLex()
     import spark.implicits._
     // query-side sparse vector: token counts (NOT distinct — a repeated
@@ -3380,11 +3479,9 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
     val nDocs = st.getLong(st.fieldIndex("n_docs"))
     val terms = queries.flatMap(analyzeTerms).distinct
     val buckets = terms.map(graft.operators.InvertedIndex.bucketOfTerm).distinct
-    val posts = graft.util.FastParquet.read(spark, s"$lexPath/postings")
+    val posts = lexPostings()
       .filter(col("tb").isInCollection(buckets) && col("tok").isInCollection(terms))
     val dfT = posts.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val ws = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("score_bp").desc, col("doc_id").asc)
     posts.join(broadcast(qterms), Seq("tok"))
       .join(broadcast(dfT), Seq("tok"))
       .withColumn("s_k", expr(s"(1024 * (2 * cast($nDocs as bigint) + 2)) DIV (2*df + 1)"))
@@ -3396,8 +3493,6 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
       .agg(sum(expr("qtf * tf * ((idf_bp * idf_bp) DIV 10000)")).as("score_bp"))
       .transform(d => maskedIds().fold(d)(x =>
         d.join(broadcast(x), Seq("doc_id"), "left_anti")))
-      .withColumn("rank", row_number().over(ws))
-      .filter(col("rank") <= kPool)
   }
 
   /**
@@ -3449,37 +3544,16 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
       requests.forall(valid.contains),
       s"requests must be a distinct subset of $valid, got $requests")
     admit()
-    val qdf = queryDf(queries)
-    val wv = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("score").desc, col("doc_id").asc)
-    def pool(name: String): DataFrame = (name match {
-      case "vector" =>
-        scoredChunks(qdf, None)
-          .groupBy(col("query_id"), col("doc_id")).agg(max(col("score")).as("score"))
-          .withColumn("r", row_number().over(wv)).filter(col("r") <= kPool)
-      case "lexical" =>
-        lexicalRank(queries, kPool).withColumn("r", col("lex_rank"))
-      case "sparse" =>
-        sparseRank(queries, kPool).withColumn("r", col("rank"))
-    }).select(col("query_id"), col("doc_id"), lit(name).as("pool"),
-      col("r").cast("long").as("r"))
-    val tagged = requests.map(pool).reduce(_ unionByName _)
-    val wf = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("rrf_ppm").desc, col("doc_id").asc)
-    val top = tagged.groupBy(col("query_id"), col("doc_id"))
-      .agg(
-        coalesce(max(when(col("pool") === "lexical", col("r"))), lit(0L)).as("lex_rank"),
-        coalesce(max(when(col("pool") === "vector", col("r"))), lit(0L)).as("vec_rank"),
-        coalesce(max(when(col("pool") === "sparse", col("r"))), lit(0L)).as("sparse_rank"),
-        sum(expr("1000000 DIV (60 + r)")).as("rrf_ppm"))
-      .withColumn("rank", row_number().over(wf))
-      .filter(col("rank") <= cfg.limit)
-    store().join(broadcast(top), "doc_id")
-      .join(broadcast(qdf.select(col("query_id"), col("query"))), Seq("query_id"))
-      .select(col("query_id"), col("query"), col("doc_id"), col("lex_rank"),
-        col("vec_rank"), col("sparse_rank"), col("rrf_ppm"), col("rank"),
-        substring(col("text"), 1, 200).as("preview"))
-      .orderBy(col("query_id"), col("rank"))
+    def pool(name: String): Map[Long, Array[(Long, Double)]] =
+      if (!requests.contains(name)) Map.empty
+      else name match {
+        case "vector" => vectorTopK(queryDf(queries), kPool)
+        case "lexical" => lexicalTopK(queries, kPool)
+        case "sparse" => VectorSearch.collectTopK(sparseScores(queries), kPool,
+          scoreCol = "score_bp")
+      }
+    fusedHits(queries, Seq("lex_rank" -> pool("lexical"), "vec_rank" -> pool("vector"),
+      "sparse_rank" -> pool("sparse")))
   }
 
   def hybridSearch(queries: Seq[String], kPool: Int = 100): DataFrame =
@@ -3512,32 +3586,9 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
   private def hybridImpl(queries: Seq[String], kPool: Int,
                          eligible: Option[DataFrame]): DataFrame = {
     admit()
-    val qdf = queryDf(queries)
-    val wv = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("score").desc, col("doc_id").asc)
-    val vrank = scoredChunks(qdf, eligible)
-      .groupBy(col("query_id"), col("doc_id")).agg(max(col("score")).as("score"))
-      .withColumn("vec_rank", row_number().over(wv))
-      .filter(col("vec_rank") <= kPool)
-      .select(col("query_id"), col("doc_id"), col("vec_rank").cast("long").as("vec_rank"))
-    val lrank = lexicalRank(queries, kPool, eligible).drop("bm25_bp")
-    // reciprocal-rank fusion, k=60: contributions in ppm stay integers
-    val wf = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("rrf_ppm").desc, col("doc_id").asc)
-    val top = lrank.join(vrank, Seq("query_id", "doc_id"), "full_outer")
-      .withColumn("rrf_ppm",
-        coalesce(expr("1000000 DIV (60 + lex_rank)"), lit(0L)) +
-          coalesce(expr("1000000 DIV (60 + vec_rank)"), lit(0L)))
-      .withColumn("lex_rank", coalesce(col("lex_rank"), lit(0L)))
-      .withColumn("vec_rank", coalesce(col("vec_rank"), lit(0L)))
-      .withColumn("rank", row_number().over(wf))
-      .filter(col("rank") <= cfg.limit)
-    store().join(broadcast(top), "doc_id")
-      .join(broadcast(qdf.select(col("query_id"), col("query"))), Seq("query_id"))
-      .select(col("query_id"), col("query"), col("doc_id"), col("lex_rank"),
-        col("vec_rank"), col("rrf_ppm"), col("rank"),
-        substring(col("text"), 1, 200).as("preview"))
-      .orderBy(col("query_id"), col("rank"))
+    // each pool's top-kPool is collected, and fused on the driver
+    fusedHits(queries, Seq("lex_rank" -> lexicalTopK(queries, kPool, eligible),
+      "vec_rank" -> vectorTopK(queryDf(queries), kPool, eligible)))
   }
 
   /**
@@ -3559,48 +3610,19 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
     require(wLexBp >= 0 && wVecBp >= 0 && wLexBp + wVecBp > 0,
       s"bad weights: lex=$wLexBp vec=$wVecBp")
     admit()
-    val qdf = queryDf(queries)
-    val wv = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("score").desc, col("doc_id").asc)
-    // each pool feeds TWO consumers (the fusion join and its min-max
-    // stats): pin once — kPool×queries rows — so the corpus scoring pass
-    // and the postings probe each run exactly once per call
-    val vpool = scoredChunks(qdf, None)
-      .groupBy(col("query_id"), col("doc_id")).agg(max(col("score")).as("score"))
-      .withColumn("vec_rank", row_number().over(wv))
-      .filter(col("vec_rank") <= kPool)
-      .select(col("query_id"), col("doc_id"),
-        expr("cast(floor(score * 10000 + 0.5) as bigint)").as("vs"))
-      .localCheckpoint(true)
-    val lpool = lexicalRank(queries, kPool)
-      .select(col("query_id"), col("doc_id"), col("bm25_bp"))
-      .localCheckpoint(true)
-    def stats(df: DataFrame, c: String): DataFrame = df.groupBy(col("query_id"))
-      .agg(min(col(c)).as(s"${c}_mn"), max(col(c)).as(s"${c}_mx"))
-    val fusedW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("fused_bp").desc, col("doc_id").asc)
-    val top = lpool.join(vpool, Seq("query_id", "doc_id"), "full_outer")
-      .join(broadcast(stats(lpool, "bm25_bp")), Seq("query_id"), "left")
-      .join(broadcast(stats(vpool, "vs")), Seq("query_id"), "left")
-      .withColumn("lex_norm_bp", expr(
-        "CASE WHEN bm25_bp IS NULL THEN 0" +
-          " WHEN bm25_bp_mx > bm25_bp_mn" +
-          " THEN (10000 * (bm25_bp - bm25_bp_mn)) DIV (bm25_bp_mx - bm25_bp_mn)" +
-          " ELSE 10000 END"))
-      .withColumn("vec_norm_bp", expr(
-        "CASE WHEN vs IS NULL THEN 0" +
-          " WHEN vs_mx > vs_mn THEN (10000 * (vs - vs_mn)) DIV (vs_mx - vs_mn)" +
-          " ELSE 10000 END"))
-      .withColumn("fused_bp",
-        expr(s"($wLexBp * lex_norm_bp + $wVecBp * vec_norm_bp) DIV 10000"))
-      .withColumn("rank", row_number().over(fusedW))
-      .filter(col("rank") <= cfg.limit)
-    store().join(broadcast(top), "doc_id")
-      .join(broadcast(qdf.select(col("query_id"), col("query"))), Seq("query_id"))
-      .select(col("query_id"), col("query"), col("doc_id"), col("lex_norm_bp"),
-        col("vec_norm_bp"), col("fused_bp"), col("rank"),
-        substring(col("text"), 1, 200).as("preview"))
-      .orderBy(col("query_id"), col("rank"))
+    val vpool = vectorTopK(queryDf(queries), kPool)
+    val lpool = lexicalTopK(queries, kPool)
+    val hits = queries.indices.flatMap { q =>
+      val lex = lpool.getOrElse(q.toLong, Array.empty[(Long, Double)])
+        .map { case (d, bm25) => (d, bm25.toLong) }
+      weightedFuse(Seq(lex, vecBp(vpool, q.toLong)), Seq(wLexBp, wVecBp), cfg.limit)
+        .zipWithIndex.map { case ((d, Seq(l, v), f), i) =>
+          Row(q.toLong, queries(q), d, l.getOrElse(0L), v.getOrElse(0L), f, i + 1)
+        }
+    }
+    hydrate(hits, Engine.schemaOf("query_id" -> LongType, "query" -> StringType,
+      "doc_id" -> LongType, "lex_norm_bp" -> LongType, "vec_norm_bp" -> LongType,
+      "fused_bp" -> LongType, "rank" -> IntegerType))
   }
 
   /**
@@ -3612,34 +3634,33 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
    * [[Engine.CrossScorer]] reads each (query, text) pair together —
    * the signal a bi-encoder structurally cannot produce. Final order:
    * cross score, vector score, then pk (total, replayable). At 100 TB the
-   * expensive model runs on kPool·queries rows — never the corpus; the
-   * hydration join broadcasts the pool against the store scan.
+   * expensive model runs on kPool·queries rows — never the corpus — in
+   * `cfg.batchSize` batches on the driver, after one by-id hydration scan.
    */
   def searchRerank(queries: Seq[String], kPool: Int = 20,
                    scorer: Engine.CrossScorer = Engine.LexicalCrossScorer): DataFrame = {
     require(kPool >= cfg.limit, s"kPool=$kPool must cover the final top-${cfg.limit}")
     admit()
-    val qdf = queryDf(queries)
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("vec_score").desc, col("doc_id").asc)
-    val pool = scoredChunks(qdf, None)
-      .groupBy(col("query_id"), col("query"), col("doc_id"))
-      .agg(max(col("score")).as("vec_score"))
-      .withColumn("vec_rank", row_number().over(wp))
-      .filter(col("vec_rank") <= kPool)
-      .drop("vec_rank")
-    val hydrated = store().select(col("doc_id"), col("text"))
-      .join(broadcast(pool), Seq("doc_id"))
-    val scored = Engine.crossScore(hydrated, "query", "text", "ce_bp",
-      cfg.batchSize, scorer)
-    val wf = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("ce_bp").desc, col("vec_score").desc, col("doc_id").asc)
-    scored.withColumn("rank", row_number().over(wf))
-      .filter(col("rank") <= cfg.limit)
-      .select(col("query_id"), col("query"), col("doc_id"), col("ce_bp"),
-        col("vec_score"), col("rank"), substring(col("text"), 1, 200).as("preview"))
-      .orderBy(col("query_id"), col("rank"))
+    // pool rows: (query_id, query, doc_id, vec_score, rank, text, preview)
+    val pool = hydrate(hitRows(queries, vectorTopK(queryDf(queries), kPool)),
+      Engine.HitSchema, Seq(col("text"), preview)).collect()
+    val ce = pool.grouped(cfg.batchSize).flatMap { b =>
+      val sc = scorer.scoreBatch(b.map(r => (r.getString(1), r.getString(5))).toSeq)
+      require(sc.length == b.length,
+        s"scorer returned ${sc.length} scores for a ${b.length}-pair batch")
+      sc
+    }.toArray
+    val rows = pool.zip(ce).groupBy(_._1.getLong(0)).toSeq.sortBy(_._1).flatMap { case (_, hits) =>
+      hits.sortWith { case ((r1, c1), (r2, c2)) =>
+        val (v1, v2) = (r1.getDouble(3), r2.getDouble(3))
+        c1 > c2 || (c1 == c2 && (v1 > v2 || (v1 == v2 && r1.getLong(2) < r2.getLong(2))))
+      }.take(cfg.limit).zipWithIndex.map { case ((r, c), i) =>
+        Row(r.getLong(0), r.getString(1), r.getLong(2), c, r.getDouble(3), i + 1, r.getString(6))
+      }
+    }
+    spark.createDataFrame(rows.asJava, Engine.schemaOf("query_id" -> LongType,
+      "query" -> StringType, "doc_id" -> LongType, "ce_bp" -> LongType,
+      "vec_score" -> DoubleType, "rank" -> IntegerType, "preview" -> StringType))
   }
 
   // =====================================================================
@@ -3854,26 +3875,22 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
     * eligibility gate, so a 90%-pass filter at scale shuffles instead of
     * force-broadcasting. */
   private def fieldPool(field: String, vectors: Seq[Seq[Float]],
-                        kPool: Int, nprobe: Int, epr: String = ""): DataFrame = {
+                        kPool: Int, nprobe: Int,
+                        epr: String = ""): Map[Long, Array[(Long, Double)]] = {
     require(vectors.nonEmpty && vectors.forall(_.nonEmpty),
       s"field '$field': query vectors must be non-empty")
     val layout = fieldIndex(field)
     val np = if (nprobe > 0) nprobe else cfg.nprobe
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("score").desc, col("doc_id").asc)
     val cand0 = layout.scoredCandidates(vecQueryDf(vectors), np)
     val cand =
       if (epr.isEmpty) cand0
       else cand0.join(
         store().filter(exprPredicate(epr)).select(col("doc_id")).distinct(),
         Seq("doc_id"), "left_semi")
-    // masks BEFORE the ranking window — a tombstoned doc must not leave a
-    // rank hole in the pool it would have occupied
-    maskedIds().fold(cand)(x => cand.join(broadcast(x), Seq("doc_id"), "left_anti"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kPool)
-      .select(col("query_id"), col("doc_id"), col("score"),
-        col("rank").cast("long").as("rank"))
+    // masks BEFORE the top-k cut — a tombstoned doc must not leave a rank
+    // hole in the pool it would have occupied
+    VectorSearch.collectTopK(
+      maskedIds().fold(cand)(x => cand.join(broadcast(x), Seq("doc_id"), "left_anti")), kPool)
   }
 
   /** Single-field ANN search — Milvus's `search(anns_field=...)` naming
@@ -3882,8 +3899,13 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
   def searchVectorField(field: String, vectors: Seq[Seq[Float]],
                         k: Int = 0, nprobe: Int = 0, expr: String = ""): DataFrame = {
     admit()
-    val kk = if (k > 0) k else cfg.limit
-    fieldPool(field, vectors, kk, nprobe, expr).orderBy(col("query_id"), col("rank"))
+    val pool = fieldPool(field, vectors, if (k > 0) k else cfg.limit, nprobe, expr)
+    val rows = vectors.indices.flatMap { q =>
+      pool.getOrElse(q.toLong, Array.empty[(Long, Double)]).zipWithIndex
+        .map { case ((d, sc), i) => Row(q.toLong, d, sc, i + 1L) }
+    }
+    spark.createDataFrame(rows.asJava, Engine.schemaOf("query_id" -> LongType,
+      "doc_id" -> LongType, "score" -> DoubleType, "rank" -> LongType))
   }
 
   /**
@@ -3905,27 +3927,18 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
     require(nq > 0 && requests.forall(_.vectors.size == nq),
       "every request must carry the same number of query vectors (Milvus's nq rule)")
     admit()
-    val kk = if (k > 0) k else cfg.limit
-    val tagged = requests.map { r =>
-      fieldPool(r.field, r.vectors, r.kPool, r.nprobe, r.expr)
-        .select(col("query_id"), col("doc_id"), lit(r.field).as("field"),
-          col("rank").as("r"))
-    }.reduce(_ unionByName _)
-    val wf = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("rrf_ppm").desc, col("doc_id").asc)
-    val top = tagged.groupBy(col("query_id"), col("doc_id"))
-      .agg(
-        sum(expr("1000000 DIV (60 + r)")).as("rrf_ppm"),
-        array_join(transform(
-          array_sort(collect_list(struct(col("field"), col("r")))),
-          p => concat(p.getField("field"), lit(":"),
-            p.getField("r").cast("string"))), ",").as("field_ranks"))
-      .withColumn("rank", row_number().over(wf))
-      .filter(col("rank") <= kk)
-    store().join(broadcast(top), "doc_id")
-      .select(col("query_id"), col("doc_id"), col("field_ranks"),
-        col("rrf_ppm"), col("rank"), substring(col("text"), 1, 200).as("preview"))
-      .orderBy(col("query_id"), col("rank"))
+    val pools = requests.map(r => fieldPool(r.field, r.vectors, r.kPool, r.nprobe, r.expr))
+    val fields = requests.map(_.field)
+    val hits = (0 until nq).flatMap { q =>
+      rrfFuse(pools, q.toLong, if (k > 0) k else cfg.limit).zipWithIndex.map {
+        case ((d, ranks, ppm), i) =>
+          val fieldRanks = fields.zip(ranks).filter(_._2 > 0).sorted
+            .map { case (f, r) => s"$f:$r" }.mkString(",")
+          Row(q.toLong, d, fieldRanks, ppm, i + 1)
+      }
+    }
+    hydrate(hits, Engine.schemaOf("query_id" -> LongType, "doc_id" -> LongType,
+      "field_ranks" -> StringType, "rrf_ppm" -> LongType, "rank" -> IntegerType))
   }
 
   /**
@@ -3951,33 +3964,18 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
     require(nq > 0 && requests.forall(_.vectors.size == nq),
       "every request must carry the same number of query vectors (Milvus's nq rule)")
     admit()
-    val kk = if (k > 0) k else cfg.limit
-    val tagged = requests.zip(weightsBp).map { case (r, w) =>
-      fieldPool(r.field, r.vectors, r.kPool, r.nprobe, r.expr)
-        .select(col("query_id"), col("doc_id"), lit(r.field).as("field"),
-          expr("cast(floor(score * 10000 + 0.5) as bigint)").as("vs"),
-          lit(w).as("w"))
-    }.reduce(_ unionByName _).localCheckpoint(true)
-    val stats = tagged.groupBy(col("query_id"), col("field"))
-      .agg(min(col("vs")).as("mn"), max(col("vs")).as("mx"))
-    val wf = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("fused_bp").desc, col("doc_id").asc)
-    val top = tagged.join(broadcast(stats), Seq("query_id", "field"))
-      .withColumn("norm_bp", expr(
-        "CASE WHEN mx > mn THEN (10000 * (vs - mn)) DIV (mx - mn) ELSE 10000 END"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(expr("w * norm_bp")).as("wsum"),
-        array_join(transform(
-          array_sort(collect_list(struct(col("field"), col("norm_bp")))),
-          p => concat(p.getField("field"), lit(":"),
-            p.getField("norm_bp").cast("string"))), ",").as("field_scores"))
-      .withColumn("fused_bp", expr("wsum DIV 10000"))
-      .withColumn("rank", row_number().over(wf))
-      .filter(col("rank") <= kk)
-    store().join(broadcast(top), "doc_id")
-      .select(col("query_id"), col("doc_id"), col("field_scores"),
-        col("fused_bp"), col("rank"), substring(col("text"), 1, 200).as("preview"))
-      .orderBy(col("query_id"), col("rank"))
+    val pools = requests.map(r => fieldPool(r.field, r.vectors, r.kPool, r.nprobe, r.expr))
+    val fields = requests.map(_.field)
+    val hits = (0 until nq).flatMap { q =>
+      weightedFuse(pools.map(vecBp(_, q.toLong)), weightsBp, if (k > 0) k else cfg.limit)
+        .zipWithIndex.map { case ((d, norms, fused), i) =>
+          val fieldScores = fields.zip(norms).collect { case (f, Some(n)) => (f, n) }.sorted
+            .map { case (f, n) => s"$f:$n" }.mkString(",")
+          Row(q.toLong, d, fieldScores, fused, i + 1)
+        }
+    }
+    hydrate(hits, Engine.schemaOf("query_id" -> LongType, "doc_id" -> LongType,
+      "field_scores" -> StringType, "fused_bp" -> LongType, "rank" -> IntegerType))
   }
 
   /** Memoized handle on the PERSISTED IVF layout — building the quantizer
@@ -4040,6 +4038,9 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
     case "IVF_SQ8" => s"IVF_SQ8;nlist=${cfg.nlist};dim=${cfg.embedDim}"
     case "IVF_RABITQ" =>
       s"IVF_RABITQ;nlist=${cfg.nlist};dim=${cfg.embedDim};rerank=${cfg.pqRerank}"
+    // cells assigned by the probe's max-cosine rule (layouts assigned by
+    // the older L2 rule carry no `assign` part, so they rebuild)
+    case "IVF_FLAT" => s"IVF_FLAT;nlist=${cfg.nlist};assign=cosine"
     case t => s"$t;nlist=${cfg.nlist}"
   }
 
@@ -4076,8 +4077,9 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
    * assigned its cell, and the layout is written hive-partitioned by cell
    * ([[VectorSearch.writeIvf]]) with the index fingerprint it derives from;
    * every later call — including a fresh Engine instance on a fresh driver —
-   * just LOADS the layout, so a probe's cell equi-join becomes a partition
-   * filter and unprobed cells never touch IO. This is the create_index ↔
+   * just LOADS the layout (its centroids memoised on the driver), so a
+   * probe is a literal cell partition filter and unprobed cells never
+   * touch IO ([[VectorSearch.probedRows]]). This is the create_index ↔
    * search split of the reference (vdb.py:209-211 builds offline; :88-100
    * searches the built index).
    */
@@ -4276,14 +4278,27 @@ class Engine(spark: SparkSession, val cfg: EngineConfig,
     require(!annDropped,
       "index was dropped (dropIndex); run update() to re-create it")
     val hits = ivfIndex().search(queryDf(queries), cfg.limit, cfg.nprobe)
-      .withColumn("doc_id", TextFns.parentId(col("chunk_id")).cast("long"))
-    store().join(broadcast(hits), "doc_id")
-      .select(col("query_id"), col("doc_id"), col("chunk_id"), col("score"), col("rank"))
+      .select(col("query_id"), TextFns.parentId(col("chunk_id")).cast("long").as("doc_id"),
+        col("chunk_id"), col("score"), col("rank"))
       .orderBy(col("query_id"), col("rank"))
+    hydrate(hits.collect().toSeq, hits.schema, Nil)
   }
 }
 
 object Engine {
+
+  /** A schema of nullable fields, in the given order. */
+  private[graft] def schemaOf(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t) })
+
+  /** The lexical postings layout: one row per (document, analysed token),
+    * hive-partitioned by the token's hash bucket `tb`. */
+  private[graft] val LexPostingsSchema: StructType = schemaOf("doc_id" -> LongType,
+    "tok" -> StringType, "tf" -> LongType, "dl" -> LongType, "tb" -> IntegerType)
+
+  /** The ranked rows of the [[graft.Engine#search]] family, before hydration. */
+  private[graft] val HitSchema: StructType = schemaOf("query_id" -> LongType,
+    "query" -> StringType, "doc_id" -> LongType, "score" -> DoubleType, "rank" -> IntegerType)
 
   /** The hidden JSON column [[graft.Engine#ingestDynamic]] packs
     * undeclared columns into — Milvus names its dynamic-field container
@@ -4579,29 +4594,5 @@ object Engine {
         if (a.isEmpty || b.isEmpty) 0L
         else 10000L * a.intersect(b).size / a.union(b).size
     }
-  }
-
-  /** Append `outCol` (long) scoring each row's (qCol, tCol) pair through
-    * the batched [[CrossScorer]] — the mapPartitions shape of
-    * [[graft.functions.VectorFns.embedPartitions]]: narrow, one scorer
-    * call per `batchSize` rows, no shuffle. */
-  private[graft] def crossScore(df: DataFrame, qCol: String, tCol: String,
-                                outCol: String, batchSize: Int,
-                                scorer: CrossScorer): DataFrame = {
-    val schema = df.schema.add(org.apache.spark.sql.types.StructField(
-      outCol, org.apache.spark.sql.types.LongType, nullable = false))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    val qi = df.schema.fieldIndex(qCol)
-    val ti = df.schema.fieldIndex(tCol)
-    df.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        val scores = scorer.scoreBatch(batch.map(r => (r.getString(qi), r.getString(ti))))
-        require(scores.length == batch.length,
-          s"scorer returned ${scores.length} scores for a ${batch.length}-pair batch")
-        batch.iterator.zip(scores.iterator).map { case (r, s) =>
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ s)
-        }
-      }
-    }(enc)
   }
 }

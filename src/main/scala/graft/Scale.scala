@@ -541,10 +541,10 @@ object Scale {
       val eng = new Engine(spark, EngineConfig(s"$base/store", s"$base/index"))
       val qs = Seq("t3 t17 t41", "t5 t99") // token ids "t<k>" exist at every scale (vocab >= 1000)
       measure("lexserve_build", s, n) {
-        eng.lexicalRank(qs, 100).count() // first call builds + stamps the layout
+        eng.lexicalScores(qs).count() // first call builds + stamps the layout
       }
       measure("lexserve_query", s, n) {
-        eng.lexicalRank(qs, 100).count() // steady-state: pruned postings probe
+        eng.lexicalScores(qs).count() // steady-state: pruned postings probe
       }
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     }
@@ -751,7 +751,7 @@ object Scale {
         .write.mode("overwrite").parquet(s"$base/store")
       val eng = new Engine(spark, EngineConfig(s"$base/store", s"$base/index"))
       eng.update() // untimed: offline chunk+embed+index build
-      eng.lexicalRank(Seq("t3"), 10).count() // untimed: builds the lex layout
+      eng.lexicalScores(Seq("t3")).count() // untimed: builds the lex layout
       measure("textmatch_gate", s, n) {
         eng.searchTextMatch(Seq("t3 t17 t41"), "zebraqx").count()
       }

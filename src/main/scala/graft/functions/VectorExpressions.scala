@@ -101,7 +101,8 @@ case class HashEmbed(child: Expression, dim: Int) extends UnaryExpression {
 
 /**
  * Codegen'd nearest-centroid assignment — the routing rule of
- * [[graft.operators.VectorSearch.assignCells]] (L2 argmin, first-wins ties)
+ * [[graft.operators.VectorSearch.assignCells]] — the IVF probe's rule, max
+ * unrounded cosine with ties to the lowest cell ([[VectorFns.cellOrder]]) —
  * over a primitive `float[][]` centroid table carried in the plan
  * (nlist×dim floats — metadata-sized). Replaces the Scala UDF whose
  * Seq[Float] input boxed every element of every vector on every row.

@@ -127,17 +127,41 @@ object VectorFns {
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(hashEmbed(if (s == null) null else s.toString, dim))
 
-  /** [[NearestCell]]'s runtime kernel: L2 argmin over primitive arrays,
-    * first-wins ties — the exact rule of the Seq-based UDF it replaces. */
+  /** [[NearestCell]]'s runtime kernel: the IVF probe's rule ([[cellOrder]]'s
+    * first cell) over a primitive float array. */
   def nearestCell(v: org.apache.spark.sql.catalyst.util.ArrayData,
-                  cs: Array[Array[Float]]): Int = {
-    var best = 0; var bestD = Double.MaxValue
+                  cs: Array[Array[Float]]): Int =
+    nearestCell(Array.tabulate(v.numElements())(v.getFloat(_).toDouble), cs)
+
+  /** cos(v, c) in [[CosineSimilarity]]'s arithmetic: sequential double
+    * accumulation, `dot / sqrt(|v|²·|c|²)`, 0.0 when either norm is 0 — so a
+    * driver-side probe ranks cells exactly as the SQL expression would. */
+  def cosine(v: Array[Double], c: Array[Float]): Double = {
+    require(v.length == c.length,
+      s"cosine_sim: mismatched vector dimensions ${v.length} vs ${c.length}")
+    var dot = 0.0; var nv = 0.0; var nc = 0.0; var i = 0
+    while (i < v.length) {
+      val x = v(i); val y = c(i).toDouble
+      dot += x * y; nv += x * x; nc += y * y; i += 1
+    }
+    if (nv == 0.0 || nc == 0.0) 0.0 else dot / math.sqrt(nv * nc)
+  }
+
+  /** The IVF cell rule, shared by assignment and probe: cells in unrounded
+    * cosine-to-`v` descending order, ties to the lower cell. */
+  def cellOrder(v: Array[Double], cs: Array[Array[Float]]): Array[Int] = {
+    val s = cs.map(cosine(v, _))
+    cs.indices.sortWith((a, b) => s(a) > s(b) || (s(a) == s(b) && a < b)).toArray
+  }
+
+  /** [[cellOrder]]'s first cell without the sort: the strict `>` keeps the
+    * lowest of tied cells. */
+  def nearestCell(v: Array[Double], cs: Array[Array[Float]]): Int = {
+    var best = 0; var bestS = Double.NegativeInfinity
     var c = 0
     while (c < cs.length) {
-      var d = 0.0; var i = 0
-      val cv = cs(c)
-      while (i < cv.length) { val t = v.getFloat(i) - cv(i); d += t * t; i += 1 }
-      if (d < bestD) { bestD = d; best = c }
+      val s = cosine(v, cs(c))
+      if (s > bestS) { bestS = s; best = c }
       c += 1
     }
     best

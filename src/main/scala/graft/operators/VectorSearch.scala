@@ -1,9 +1,12 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import graft.functions.VectorFns
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Bounded top-k buffer: parallel primitive arrays in (score desc, id asc)
   * order. Top-level case class so `Encoders.product` needs no outer pointer. */
@@ -124,15 +127,35 @@ object VectorSearch {
         (col("i") + 1).cast("int").as("rank"))
   }
 
-  /**
-   * Per-parent best-hit reduction (SURVEY §2.5 A2 + §2.4 J5): chunk-level hits
-   * → parent key (reference vdb.py:104-110,188-190) keeping the best score.
-   */
-  def bestHitPerParent(hits: DataFrame, chunkIdCol: String, scoreCol: String,
-                       ascending: Boolean = false): DataFrame = {
-    val parent = graft.functions.TextFns.parentId(col(chunkIdCol))
-    val agg = if (ascending) min(col(scoreCol)) else max(col(scoreCol))
-    hits.groupBy(parent.as("parent")).agg(agg.as(scoreCol))
+  /** Each query's top-`k` (score desc, id asc; an id's best score counts)
+    * of `(query id, id, score)` rows, collected: each partition keeps its own
+    * top-k, the driver merges them — one job, no shuffle. Exact: an id cut
+    * from its partition's top-k has k ids ahead of it there, no lower
+    * globally. A long score must stay below 2^53 (exact as a double). */
+  def collectTopK(scored: DataFrame, k: Int, queryIdCol: String = "query_id",
+                  idCol: String = "doc_id",
+                  scoreCol: String = "score"): Map[Long, Array[(Long, Double)]] = {
+    val rows = scored.select(col(queryIdCol).cast("long"), col(idCol).cast("long"),
+      col(scoreCol))
+    val longScore = rows.schema(2).dataType == LongType
+    val local = rows.queryExecution.toRdd.mapPartitions { it =>
+      topPerQuery(it.filter(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
+        .map(r => (r.getLong(0), r.getLong(1),
+          if (longScore) r.getLong(2).toDouble else r.getDouble(2))), k)
+        .iterator.flatMap { case (q, hits) => hits.iterator.map(h => (q, h._1, h._2)) }
+    }.collect()
+    topPerQuery(local.iterator, k)
+  }
+
+  /** [[collectTopK]]'s per-partition and merge step. */
+  private def topPerQuery(rows: Iterator[(Long, Long, Double)],
+                          k: Int): Map[Long, Array[(Long, Double)]] = {
+    val best = scala.collection.mutable.HashMap.empty[(Long, Long), Double]
+    rows.foreach { case (q, id, s) => if (best.get((q, id)).forall(_ < s)) best((q, id)) = s }
+    best.toArray.groupBy(_._1._1).map { case (q, hits) =>
+      q -> hits.map { case ((_, id), s) => (id, s) }
+        .sortWith((a, b) => a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)).take(k)
+    }
   }
 
   /**
@@ -261,8 +284,8 @@ object VectorSearch {
    * replays in SQL. At 100 TB this is THE index shape: the ADC scan's
    * per-(row × query) cost — measured linear but brute in SCALE.md's pq
    * curve — is multiplied by nprobe/nlist (here 1/4), and on a
-   * cell-partitioned layout (writeIvf) the probe join prunes partitions,
-   * so unprobed cells never even reach the encode.
+   * cell-partitioned layout (writeIvf) the probe's literal cell filter
+   * prunes partitions, so unprobed cells never even reach the encode.
    */
   def topKIvfPq(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
                 nlist: Int = 16, nprobe: Int = 4, m: Int = 4, nCodes: Int = 8,
@@ -272,22 +295,16 @@ object VectorSearch {
                 queryVecCol: String = "query_vec"): DataFrame = {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
     val ivf = buildIvfSeeded(corpus, nlist, dim, ivfSeed, idCol, vecCol)
-    // probe choice: top-nprobe cells by UNROUNDED cosine, ties → lowest
-    // cell (IvfIndex.search's centroid window, replayed by the oracle)
-    val cwin = Window.partitionBy(col(queryIdCol))
-      .orderBy(VectorFns.cosineSim(col(queryVecCol), col("centroid")).desc, col("cell").asc)
-    val probed = queries.crossJoin(broadcast(ivf.centroids))
-      .withColumn("crank", row_number().over(cwin))
-      .filter(col("crank") <= nprobe)
-      .select(col(queryIdCol), col("cell"))
     val books = pqCodebooks(dim, m, nCodes, pqSeed)
     // compressed index rows: (id, cell, s, code) — the cell rides through
-    // the encode so the probe join can prune before any distance work
+    // the encode so the probe can prune before any distance work
     val codes = pqEncode(ivf.cells.select(col(idCol), col("cell"), col(vecCol)),
       vecCol, dim / m, books)
     val lut = pqLut(queries, dim / m, books, queryIdCol, queryVecCol)
-    val acc = codes
-      .join(broadcast(probed), Seq("cell")) // prune: only probed (query, cell) pairs
+    // prune: only probed (query, cell) pairs ([[probedRows]], the oracle's
+    // replayed probe rule)
+    val acc = probedRows(codes, queries.select(col(queryIdCol), col(queryVecCol)),
+        ivf.centroidArray, nprobe, queryVecCol)
       .join(broadcast(lut), Seq(queryIdCol, "s", "code"))
       .groupBy(col(queryIdCol), col(idCol))
       .agg(sum(col("d").cast("decimal(18,4)")).as("adist_dec"))
@@ -393,9 +410,10 @@ object VectorSearch {
   /**
    * IVF layout over an embedding table (SURVEY §4 P6): `nlist` KMeans
    * centroids; every vector is assigned its nearest cell. Search scores the
-   * query against centroids (tiny, broadcast), keeps `nprobe` cells, and runs
-   * exact scoring only inside those cells — at scale the cell column is the
-   * partition key, so pruning skips whole partitions.
+   * query against the centroids on the driver ([[probedRows]]), keeps
+   * `nprobe` cells, and runs exact scoring only inside those cells — at
+   * scale the cell column is the partition key, so pruning skips whole
+   * partitions.
    *
    * `nprobe == nlist` reproduces exact search (the reference's own config:
    * nlist=128, nprobe=128 — config.yml:81-82).
@@ -403,6 +421,10 @@ object VectorSearch {
   final case class IvfIndex(cells: DataFrame, centroids: DataFrame,
                             idCol: String, vecCol: String,
                             boundsOpt: Option[DataFrame] = None) {
+
+    /** The centroids on the driver, by cell id — collected once per loaded
+      * layout (nlist rows), so a probe costs no job. */
+    lazy val centroidArray: Array[Array[Float]] = collectCentroids(centroids)
 
     /**
      * Per-cell angular radius — the MINIMUM member cosine to the cell's own
@@ -429,8 +451,8 @@ object VectorSearch {
      * EXACT: the bound is sound (see [[cellBounds]]), so a skipped cell
      * provably contains no qualifying vector — results equal the brute
      * scan at every threshold, while IO scales with the qualifying cells
-     * only. On a [[writeIvf]]-persisted layout the probe set becomes a
-     * dynamic partition filter, same as [[scoredCandidates]].
+     * only. On a [[writeIvf]]-persisted layout AQE may turn the cell join
+     * into a dynamic partition filter ([[probedRows]]' is literal).
      */
     def rangeSearch(queries: DataFrame, threshold: Double,
                     queryIdCol: String = "query_id",
@@ -462,7 +484,7 @@ object VectorSearch {
     def search(queries: DataFrame, k: Int, nprobe: Int,
                queryIdCol: String = "query_id", queryVecCol: String = "query_vec",
                scoreScale: Int = 4): DataFrame = {
-      val candidates = scoredCandidates(queries, nprobe, queryIdCol, queryVecCol, scoreScale)
+      val candidates = scoredCandidates(queries, nprobe, queryVecCol, scoreScale)
       val w = Window.partitionBy(col(queryIdCol)).orderBy(col("score").desc, col(idCol).asc)
       candidates
         .withColumn("rank", row_number().over(w))
@@ -478,23 +500,29 @@ object VectorSearch {
      * Engine.search) consume it directly instead of re-deriving the probe.
      */
     def scoredCandidates(queries: DataFrame, nprobe: Int,
-                         queryIdCol: String = "query_id",
                          queryVecCol: String = "query_vec",
-                         scoreScale: Int = 4): DataFrame = {
-      // rank centroids per query; keep nprobe cells
-      val cw = Window.partitionBy(col(queryIdCol))
-        .orderBy(VectorFns.cosineSim(col(queryVecCol), col("centroid")).desc, col("cell").asc)
-      val probed = queries.crossJoin(broadcast(centroids))
-        .withColumn("crank", row_number().over(cw))
-        .filter(col("crank") <= nprobe)
-        .drop("crank", "centroid")
-      // equi-join on cell prunes the corpus to the probed cells; the probe
-      // side is tiny ⇒ broadcast, which also lets dynamic partition pruning
-      // turn the join into a partition filter on a cell-partitioned layout
-      // (see writeIvf) — unprobed cells never touch IO
-      cells.join(broadcast(probed), "cell")
+                         scoreScale: Int = 4): DataFrame =
+      probedRows(cells, queries, centroidArray, nprobe, queryVecCol)
         .withColumn("score", round(VectorFns.cosineSim(col(vecCol), col(queryVecCol)), scoreScale))
+  }
+
+  /** The IVF probe, on the driver: each (broadcast-sized, so collected)
+    * query row's `nprobe` cells by [[VectorFns.cellOrder]], the rule cells
+    * are assigned by. `layout` (cell-partitioned cells or codes) is read
+    * with the probed cells as a literal `cell IN (…)` partition filter and
+    * joined to the local (query columns, cell) pairs. */
+  def probedRows(layout: DataFrame, queries: DataFrame,
+                 centroids: Array[Array[Float]], nprobe: Int,
+                 queryVecCol: String = "query_vec"): DataFrame = {
+    val vi = queries.schema.fieldIndex(queryVecCol)
+    val pairs = queries.collect().toSeq.filterNot(_.isNullAt(vi)).flatMap { r =>
+      VectorFns.cellOrder(r.getSeq[Number](vi).map(_.doubleValue).toArray, centroids)
+        .take(nprobe).map(c => Row.fromSeq(r.toSeq :+ c))
     }
+    val cells = pairs.map(_.getInt(queries.schema.length)).distinct.sorted
+    val probed = queries.sparkSession.createDataFrame(pairs.asJava,
+      queries.schema.add("cell", IntegerType, nullable = false))
+    layout.filter(col("cell").isInCollection(cells)).join(broadcast(probed), "cell")
   }
 
   /**
@@ -590,8 +618,9 @@ object VectorSearch {
    * Assign each row its nearest cell under EXISTING centroids — the
    * incremental-index path (Milvus/FAISS add-to-built-index): the quantizer
    * is NOT retrained, new vectors are just routed to their closest cell and
-   * appended to the layout. A narrow map stage (broadcast centroids, L2
-   * argmin — the same rule [[buildIvf]] assigns with), zero shuffles.
+   * appended to the layout. A narrow map stage (broadcast centroids, the
+   * probe's max-cosine rule — the same rule [[buildIvf]] assigns with and
+   * [[probedRows]] probes with), zero shuffles.
    */
   def assignCells(df: DataFrame, centroids: Array[Array[Float]],
                   vecCol: String): DataFrame =
@@ -609,10 +638,10 @@ object VectorSearch {
 
   /**
    * Persist the IVF layout hive-partitioned by cell: `path/cell=<c>/…`.
-   * A pruned probe then becomes a PARTITION filter — nprobe of nlist
-   * directories are read, the rest never touch IO (the on-disk realization
-   * of Milvus' IVF cell skip, vdb.py:90-100). Centroids ride along as one
-   * tiny parquet.
+   * A pruned probe ([[probedRows]]) is then a literal PARTITION filter —
+   * nprobe of nlist directories are read, the rest never touch IO (the
+   * on-disk realization of Milvus' IVF cell skip, vdb.py:90-100).
+   * Centroids ride along as one tiny parquet.
    */
   def writeIvf(index: IvfIndex, path: String): Unit = {
     val spark = index.cells.sparkSession
@@ -681,8 +710,8 @@ object VectorSearch {
    * PQ-encode a layout's cells with seeded codebooks and PERSIST the codes
    * hive-partitioned by cell (`path/pqcodes/cell=<c>/…`) — the compressed
    * index rows an IVF_PQ deployment serves from (faiss stores exactly
-   * this: per inverted list, the m-byte codes). A probe's cell equi-join
-   * then partition-prunes the CODES, so unprobed cells cost no IO and no
+   * this: per inverted list, the m-byte codes). A probe's literal cell
+   * filter then partition-prunes the CODES, so unprobed cells cost no IO and no
    * ADC work; the full-precision vectors are touched only by the
    * exact re-rank of the few surviving candidates.
    */
@@ -714,27 +743,20 @@ object VectorSearch {
 
   /**
    * ADC candidate cut over persisted PQ codes: probe `nprobe` cells per
-   * query (unrounded centroid cosine, ties → lowest cell — the
-   * [[IvfIndex.search]] window), rank probed-cell codes by asymmetric
+   * query ([[probedRows]]), rank probed-cell codes by asymmetric
    * distance against the broadcast LUT, keep `kCand` ids per query. The
    * IVF_PQ serving front half; callers exact-re-rank the survivors.
    */
-  def pqAdcCandidates(codes: DataFrame, centroids: DataFrame,
+  def pqAdcCandidates(codes: DataFrame, centroids: Array[Array[Float]],
                       queries: DataFrame, kCand: Int, dim: Int, m: Int,
                       nCodes: Int, seed: Long, nprobe: Int, idCol: String,
                       queryIdCol: String = "query_id",
                       queryVecCol: String = "query_vec"): DataFrame = {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
     val books = pqCodebooks(dim, m, nCodes, seed)
-    val cwin = Window.partitionBy(col(queryIdCol))
-      .orderBy(VectorFns.cosineSim(col(queryVecCol), col("centroid")).desc, col("cell").asc)
-    val probed = queries.crossJoin(broadcast(centroids))
-      .withColumn("crank", row_number().over(cwin))
-      .filter(col("crank") <= nprobe)
-      .select(col(queryIdCol), col("cell"))
     val lut = pqLut(queries, dim / m, books, queryIdCol, queryVecCol)
-    val acc = codes
-      .join(broadcast(probed), Seq("cell"))
+    val acc = probedRows(codes, queries.select(col(queryIdCol), col(queryVecCol)),
+        centroids, nprobe, queryVecCol)
       .join(broadcast(lut), Seq(queryIdCol, "s", "code"))
       .groupBy(col(queryIdCol), col(idCol))
       .agg(sum(col("d").cast("decimal(18,4)")).as("adist_dec"))
@@ -792,25 +814,19 @@ object VectorSearch {
 
   /**
    * Binary-quantization candidate cut (the RaBitQ serving front half):
-   * probe `nprobe` cells per query (the [[IvfIndex.search]] centroid
-   * window), rank the probed cells' sign codes by Hamming distance to the
+   * probe `nprobe` cells per query ([[probedRows]]), rank the probed
+   * cells' sign codes by Hamming distance to the
    * query's sign code (xor + popcount per packed word — integer-exact,
    * ~16 bytes and 2 bit-ops per pair where the float scan pays 256 bytes
    * and 64 FMAs), keep `kCand` ids per query (ties → lowest id). Callers
    * exact-re-rank the survivors against the full-precision vectors —
    * RaBitQ's refine stage.
    */
-  def binHammingCandidates(codes: DataFrame, centroids: DataFrame,
+  def binHammingCandidates(codes: DataFrame, centroids: Array[Array[Float]],
                            queries: DataFrame, kCand: Int, dim: Int,
                            nprobe: Int, idCol: String,
                            queryIdCol: String = "query_id",
                            queryVecCol: String = "query_vec"): DataFrame = {
-    val cwin = Window.partitionBy(col(queryIdCol))
-      .orderBy(VectorFns.cosineSim(col(queryVecCol), col("centroid")).desc, col("cell").asc)
-    val probed = queries.crossJoin(broadcast(centroids))
-      .withColumn("crank", row_number().over(cwin))
-      .filter(col("crank") <= nprobe)
-      .select(col(queryIdCol), col("cell"))
     val qcodes = queries
       .withColumn("qcode", expr(binPackExpr(queryVecCol, dim)))
       .select(col(queryIdCol), col("qcode"))
@@ -819,7 +835,8 @@ object VectorSearch {
       .map(w => s"bit_count(bcode[$w] ^ qcode[$w])").mkString(" + ")
     val w = Window.partitionBy(col(queryIdCol))
       .orderBy(col("hd").asc, col(idCol).asc)
-    codes.join(broadcast(probed), Seq("cell"))
+    probedRows(codes, queries.select(col(queryIdCol), col(queryVecCol)),
+        centroids, nprobe, queryVecCol)
       .join(broadcast(qcodes), Seq(queryIdCol))
       .withColumn("hd", expr(hdExpr))
       .withColumn("hrank", row_number().over(w))
@@ -896,8 +913,8 @@ object VectorSearch {
   }
 
   /**
-   * IVF_SQ8 serving: probe `nprobe` cells per query (the
-   * [[IvfIndex.search]] centroid window), reconstruct ONLY the probed
+   * IVF_SQ8 serving: probe `nprobe` cells per query ([[probedRows]]),
+   * reconstruct ONLY the probed
    * cells' codes against the stored bounds, and score the full-precision
    * query against the reconstructions (asymmetric SQ8, q145's scoring).
    * Returns every probed-cell row scored, with all code columns and all
@@ -905,19 +922,13 @@ object VectorSearch {
    * so Engine.search's per-document reduce consumes it directly.
    */
   def sq8ScoredCandidates(spark: org.apache.spark.sql.SparkSession, path: String,
-                          centroids: DataFrame, queries: DataFrame, nprobe: Int,
-                          queryIdCol: String = "query_id",
+                          centroids: Array[Array[Float]], queries: DataFrame,
+                          nprobe: Int,
                           queryVecCol: String = "query_vec",
                           scoreScale: Int = 4): DataFrame = {
     val (mnLit, mxLit) = sq8BoundsLit(graft.util.FastParquet.read(spark, s"$path/sq8bounds"))
-    val cwin = Window.partitionBy(col(queryIdCol))
-      .orderBy(VectorFns.cosineSim(col(queryVecCol), col("centroid")).desc, col("cell").asc)
-    val probed = queries.crossJoin(broadcast(centroids))
-      .withColumn("crank", row_number().over(cwin))
-      .filter(col("crank") <= nprobe)
-      .drop("crank", "centroid")
-    graft.util.FastParquet.read(spark, s"$path/sq8codes")
-      .join(broadcast(probed), "cell")
+    probedRows(graft.util.FastParquet.read(spark, s"$path/sq8codes"), queries,
+        centroids, nprobe, queryVecCol)
       .withColumn("score", round(VectorFns.cosineSim(
         sq8Recon(col("codes"), mnLit, mxLit), col(queryVecCol)), scoreScale))
       .drop("codes")
@@ -925,8 +936,11 @@ object VectorSearch {
 
   /** Seeded in-memory Lloyd's KMeans (deterministic): k-distinct init from a
     * seeded shuffle, fixed iteration count, empty clusters keep their old
-    * centroid. Good enough for a coarse quantizer — cell quality only
-    * affects pruned-probe recall, never nprobe = nlist correctness. */
+    * centroid. Points join the cell the probe would pick first
+    * ([[VectorFns.nearestCell]]: max cosine, ties to the lowest cell), so a
+    * vector's own cell is its first probe. Good enough for a coarse
+    * quantizer — cell quality only affects pruned-probe recall, never
+    * nprobe = nlist correctness. */
   private[operators] def lloyd(points: Array[Array[Float]], k: Int, seed: Long,
                                iters: Int): Array[Array[Float]] = {
     require(points.nonEmpty, "empty IVF training sample")
@@ -939,17 +953,7 @@ object VectorSearch {
     while (it < iters) {
       var p = 0
       while (p < points.length) {
-        val v = points(p)
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < centroids.length) {
-          var d = 0.0; var i = 0
-          val cv = centroids(c)
-          while (i < dim) { val t = v(i) - cv(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        assignment(p) = best
+        assignment(p) = VectorFns.nearestCell(points(p).map(_.toDouble), centroids)
         p += 1
       }
       val sums = Array.fill(centroids.length)(new Array[Double](dim))

@@ -7,6 +7,22 @@ import org.apache.spark.sql.functions._
   * as three DataFrame verbs. */
 class EngineSpec extends SparkSpec {
 
+  private def formatted(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+
+  /** The distinct literal `cell IN (…)` partition filters of an executed
+    * plan (its final and initial forms both print), as the cell sets they
+    * name. */
+  private def literalCellFilters(plan: String): Seq[Set[Int]] =
+    "PartitionFilters: \\[[^\\]]*cell#\\d+ IN \\(([0-9, ]+)\\)".r.findAllMatchIn(plan)
+      .map(_.group(1).split(",").map(_.trim.toInt).toSet).toSeq.distinct
+
+  /** The cells a query text probes: the driver-side probe rule. */
+  private def probedCells(eng: Engine, q: String, nprobe: Int): Set[Int] = {
+    val v = eng.queryDf(Seq(q)).head().getAs[Seq[Float]]("query_vec").map(_.toDouble).toArray
+    graft.functions.VectorFns.cellOrder(v, eng.ivfIndex().centroidArray).take(nprobe).toSet
+  }
+
   private def freshEngine(): Engine = {
     val dir = java.nio.file.Files.createTempDirectory("graft-engine").toString
     new Engine(spark, EngineConfig(
@@ -199,16 +215,20 @@ class EngineSpec extends SparkSpec {
 
   test("search plans broadcast-side scoring and broadcast hydration (no shuffle joins)") {
     // the 100 TB shape: the corpus/index side never shuffles for a search —
-    // queries broadcast into the scoring scan, hits broadcast into hydration
+    // queries broadcast into the scoring scan, and hydration is a by-id
+    // store scan with no join at all
     val eng = freshEngine()
     eng.ingest(spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text"))
     eng.update()
-    val plan = eng.search(Seq("vector search")).queryExecution
-      .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(plan.contains("BroadcastHashJoin"), plan)       // hydration join
+    val plan = formatted(eng.vectorScores(eng.queryDf(Seq("vector search"))))
     assert(plan.contains("BroadcastNestedLoopJoin"), plan) // broadcast query side
     assert(!plan.contains("SortMergeJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
+    val hydration = formatted(eng.hydrationScan(Seq(3L, 5L), Seq(col("text"))))
+    assert(!hydration.contains("Join"), hydration)
+    assert(hydration.contains("In(doc_id"), hydration)    // ids pushed to the scan
+    assert(eng.search(Seq("vector search")).queryExecution.executedPlan.toString
+      .contains("LocalTableScan"), "search must return its materialised hits")
   }
 
   test("searchIvf with nprobe == nlist matches exact search doc set") {
@@ -780,14 +800,42 @@ class EngineSpec extends SparkSpec {
     val eng = new Engine(spark, cfg)
     eng.ingest(spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text"))
     eng.update()
-    val df = eng.search(Seq("data processing pipeline"))
+    val q = "data processing pipeline"
+    val df = eng.vectorScores(eng.queryDf(Seq(q)))
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
-    // the cell equi-join against the broadcast probe set must reach the
-    // cell-partitioned scan as a (dynamic) partition-pruning filter —
-    // unprobed cell directories never touch IO
-    assert(plan.contains("dynamicpruning") || plan.contains("PartitionFilters: [isnotnull(cell"),
-      plan.take(2000))
+    // the probed cells must reach the cell-partitioned scan as a LITERAL
+    // partition filter — unprobed cell directories never touch IO, whatever
+    // AQE makes of the join (a dynamic filter it turns into `true` prunes
+    // nothing)
+    assert(literalCellFilters(plan) == Seq(probedCells(eng, q, 2)), plan.take(2000))
+    assert(!plan.contains("dynamicpruning"), plan.take(2000))
+  }
+
+  test("IVF_FLAT assigns cells by the probe's rule: each chunk's own vector probes its own cell") {
+    // 5k documents — the fixture corpus ten times over, each copy's text
+    // suffixed so its chunks embed apart
+    val dir = java.nio.file.Files.createTempDirectory("graft-assign").toString
+    val base = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
+    val docs = base.crossJoin(spark.range(10).withColumnRenamed("id", "copy"))
+      .select((col("doc_id") * 10 + col("copy")).as("doc_id"),
+        concat(col("text"), lit(" copy"), col("copy").cast("string")).as("text"))
+    val eng = new Engine(spark, EngineConfig(storePath = s"$dir/store",
+      indexPath = s"$dir/index", nlist = 16, nprobe = 1, ivfThreshold = 1L))
+    eng.ingest(docs)
+    eng.update()
+    assert(eng.store().count() == 10 * base.count())
+    val layout = eng.ivfIndex()
+    val sample = layout.cells.filter(pmod(xxhash64(col("chunk_id")), lit(20)) === 0)
+      .select("cell", "vec").collect()
+    assert(sample.length >= 100, s"sample too small: ${sample.length}")
+    // at nprobe = 1 a chunk is findable by its own vector only if its own
+    // cell is the first one probed
+    val misses = sample.count { r =>
+      val v = r.getAs[Seq[Float]]("vec").map(_.toDouble).toArray
+      graft.functions.VectorFns.cellOrder(v, layout.centroidArray).head != r.getInt(0)
+    }
+    assert(misses == 0, s"$misses of ${sample.length} sampled chunks probe another cell first")
   }
 
   test("IVF_SQ8: codes cover every chunk across incremental extend; serving rewrites nothing") {
@@ -833,12 +881,12 @@ class EngineSpec extends SparkSpec {
       val eng = new Engine(spark, cfg)
       eng.ingest(docs)
       eng.update()
-      val df = eng.search(Seq("data processing pipeline"))
+      val q = "data processing pipeline"
+      val df = eng.vectorScores(eng.queryDf(Seq(q)))
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("dynamicpruning")
-          || plan.contains("PartitionFilters: [isnotnull(cell"),
-        s"$it: ${plan.take(2000)}")
+      assert(literalCellFilters(plan) == Seq(probedCells(eng, q, 2)), s"$it: ${plan.take(2000)}")
+      assert(!plan.contains("dynamicpruning"), s"$it: ${plan.take(2000)}")
     }
   }
 
@@ -1028,7 +1076,8 @@ class EngineSpec extends SparkSpec {
     eng.ingest(spark.read.parquet(s"$sf/documents.parquet")
       .select("doc_id", "text", "lang"))
     eng.update()
-    val df = eng.searchWhere(Seq("vector search"), col("lang") === "en")
+    val eligible = eng.store().filter(col("lang") === "en").select(col("doc_id")).distinct()
+    val df = eng.vectorScores(eng.queryDf(Seq("vector search")), Some(eligible))
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     val bnlj = plan.indexOf("BroadcastNestedLoopJoin")
@@ -1760,8 +1809,9 @@ class EngineSpec extends SparkSpec {
     assert(hitIds.subsetOf(dupIds), "a hit outside the matching set leaked in")
     // the eligibility scan is bucket-pruned: its plan reads the postings
     // layout with a tb partition filter, never the store text
-    val postsPlan = eng.searchTextMatch(q, "dup").queryExecution.executedPlan.toString
-    assert(postsPlan.contains("tb"), "postings bucket column missing from the plan")
+    val postsPlan = formatted(eng.textMatchEligible("dup"))
+    assert(postsPlan.matches("(?s).*PartitionFilters: \\[[^\\]]*tb.*"),
+      s"the postings scan is not bucket-pruned\n${postsPlan.take(2000)}")
     intercept[IllegalArgumentException](eng.searchTextMatch(q, "   "))
   }
 
@@ -2441,9 +2491,10 @@ class EngineSpec extends SparkSpec {
     assert(rows.map(r => (r.getLong(2), r.getDouble(3), r.getInt(4))).toSeq ==
       base.map(r => (r.getLong(2), r.getDouble(3), r.getInt(4))).toSeq,
       "output_fields changed the ranking")
-    // neither the hydration scan nor any other scan reads the text column
-    val reads = f.queryExecution.executedPlan.toString
-      .linesIterator.filter(_.contains("ReadSchema")).toSeq
+    // neither the hydration scan nor the ranking's scans read the text column
+    val reads = Seq(eng.vectorScores(eng.queryDf(qs)),
+        eng.hydrationScan(rows.map(_.getLong(2)).toSeq, Seq("lang", "source", "n_chars").map(col)))
+      .flatMap(formatted(_).linesIterator.filter(_.contains("ReadSchema")))
     assert(reads.nonEmpty && reads.forall(!_.contains("text")),
       s"searchFields read text bytes:\n${reads.mkString("\n")}")
     intercept[IllegalArgumentException](eng.searchFields(qs, Nil))
@@ -2493,9 +2544,24 @@ class EngineSpec extends SparkSpec {
       s"sparse scores diverged from the integer replay: ${hits.mkString(", ")}")
     // serving reads only the query terms' postings buckets (the lexserve
     // property): the postings scan carries a tb partition filter
-    val plan = eng.searchSparse(Seq("apple")).queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("tb"),
-      "the sparse postings scan is not bucket-pruned")
+    val plan = formatted(eng.sparseScores(Seq("apple")))
+    assert(plan.matches("(?s).*PartitionFilters: \\[[^\\]]*tb.*"),
+      s"the sparse postings scan is not bucket-pruned\n${plan.take(2000)}")
+  }
+
+  test("zero analysed tokens: the lexical layout builds empty and lexical verbs serve") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-zerotok").toString
+    val eng = new Engine(spark, EngineConfig(storePath = s"$dir/store",
+      indexPath = s"$dir/index"))
+    import spark.implicits._
+    // space-only texts analyse to no token at all (tabs and newlines survive
+    // `trim` and split into empty tokens, so they are not this case)
+    eng.ingest(Seq((1L, "   "), (2L, " "), (3L, "      ")).toDF("doc_id", "text"))
+    eng.update()
+    assert(eng.searchSparse(Seq("apple")).collect().isEmpty)
+    val hybrid = eng.hybridSearch(Seq("apple")).collect()
+    assert(hybrid.forall(_.getAs[Long]("lex_rank") == 0L),
+      s"a document without tokens holds a lexical rank: ${hybrid.mkString(", ")}")
   }
 
   test("searchGrouped group_size: groups rank by leader; members flatten in group order") {
@@ -2733,6 +2799,33 @@ class EngineSpec extends SparkSpec {
       "a contended extend duplicated chunk rows in the persisted layout")
   }
 
+  test("overlapped extend: every side is awaited and every failure reported") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-overlap").toString
+    val cfg = EngineConfig(storePath = s"$dir/store", indexPath = s"$dir/index",
+      nlist = 8, nprobe = 8, ivfThreshold = 1L)
+    val eng = new Engine(spark, cfg)
+    val docs = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
+    eng.ingest(docs.filter(col("doc_id") % 2 === 0))
+    eng.update()
+    eng.hybridSearch(Seq("data processing pipeline")).collect() // lexical layout on disk
+    eng.ingest(docs)
+    // a FILE where a write's `_temporary` directory must go fails that
+    // write: the index append (a side job) and the lexical extend (the
+    // calling thread) both fail, while the cells append succeeds
+    Seq(s"$dir/index", s"$dir/index_lex/postings").foreach(d =>
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(d, "_temporary")))
+    val err = intercept[Throwable](eng.updateIncremental())
+    def text(t: Throwable): String =
+      if (t == null) ""
+      else (Seq(t.toString, text(t.getCause)) ++ t.getSuppressed.map(text)).mkString("\n")
+    val all = text(err)
+    assert(all.contains(s"$dir/index_lex/postings"), s"the lexical failure was dropped:\n$all")
+    assert(all.contains(s"$dir/index/_temporary"), s"the index-append failure was dropped:\n$all")
+    // the cells append was awaited: its commit finished before the verb threw
+    assert(!new java.io.File(s"$dir/index_ivf/cells/_temporary").exists(),
+      "the cells append was still running after updateIncremental returned")
+  }
+
   test("searchGrouped: one hit per group; carried-field and store-join paths agree") {
     val dir = java.nio.file.Files.createTempDirectory("graft-gsearch").toString
     val docs = spark.read.parquet(s"$sf/documents.parquet")
@@ -2757,16 +2850,17 @@ class EngineSpec extends SparkSpec {
     a.groupBy(_._1).values.foreach { hits =>
       assert(hits.map(_._2).size == hits.size, "a group surfaced twice in one query")
     }
-    // the keyed path plans NO join with the store before hydration: exactly
-    // one BroadcastHashJoin (hydration) in the keyed plan, two in the plain
-    val keyedPlan = keyed.searchGrouped(qs, "source")
-      .queryExecution.executedPlan.toString
-    val plainPlan = plain.searchGrouped(qs, "source")
-      .queryExecution.executedPlan.toString
-    def nJoins(p: String) = "BroadcastHashJoin".r.findAllIn(p).length
-    assert(nJoins(keyedPlan) < nJoins(plainPlan),
-      s"carried-field path did not save the attribution join " +
-        s"(keyed=${nJoins(keyedPlan)}, plain=${nJoins(plainPlan)})")
+    // the keyed path's ranking never reads the store (hydration is a
+    // separate by-id scan); the plain path's ranking must, to attribute
+    def readsStore(eng: Engine): Boolean =
+      eng.groupedRanking(qs, "source", 1, strict = true).queryExecution.sparkPlan
+        .collectLeaves().exists {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+            s.relation.location.rootPaths.exists(_.toString.endsWith(eng.cfg.storePath))
+          case _ => false
+        }
+    assert(!readsStore(keyed), "carried-field path still joins the store to attribute groups")
+    assert(readsStore(plain), "fixture: the plain path must attribute groups from the store")
     // the loose strict_group_size mode must also agree across attribution
     // paths (the pool cap sits between the per-doc frame and the group
     // window, downstream of where the two paths differ)
@@ -2811,10 +2905,9 @@ class EngineSpec extends SparkSpec {
     val qs = Seq("data processing pipeline", "machine learning")
     val parts = Seq("src3", "src7")
     val df = eng.searchPartitions(qs, parts)
-    df.collect()
     // the tenant scope must reach the index scan as a PARTITION filter —
     // directories of unnamed tenants are never read
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = formatted(eng.vectorScores(eng.queryDf(qs), scope = Some(col("source").isin(parts: _*))))
     assert(plan.matches("(?s).*PartitionFilters: \\[[^\\]]*source[^\\]]*\\].*"),
       s"tenant scope did not become a partition filter\n${plan.take(3000)}")
     // scope semantics == the general-predicate gate on the same predicate
@@ -2854,8 +2947,10 @@ class EngineSpec extends SparkSpec {
     // plan shape: no cartesian anywhere (the only cross joins carry
     // broadcast sides — corp stats, query vectors), and the corpus-side
     // token/doc-length join may shuffle but never broadcasts the corpus
-    val plan = eng.hybridSearch(qs).queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), plan.take(2000))
+    // (the ranking frames of both pools, before their top-kPool cuts)
+    Seq(eng.vectorScores(eng.queryDf(qs)), eng.lexicalScores(qs))
+      .map(_.queryExecution.executedPlan.toString).foreach(plan =>
+      assert(!plan.contains("CartesianProduct"), plan.take(2000)))
     // the fusion is not a relabeled vector search: lexical evidence must
     // move at least one query's top-k away from the pure vector top-k
     val vecTop = eng.search(qs).collect()

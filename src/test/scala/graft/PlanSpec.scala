@@ -503,8 +503,10 @@ class PlanSpec extends SparkSpec {
     eng.ingest(spark.read.parquet(s"$sf/documents.parquet")
       .select("doc_id", "text", "source"))
     eng.update()
-    val plan = formatted(
-      new Engine(spark, cfg).searchPartitions(Seq("vector search"), Seq("src3", "src7")))
+    val fresh = new Engine(spark, cfg)
+    val scope = Some(col("source").isin("src3", "src7"))
+    val plan = formatted(fresh.vectorScores(fresh.queryDf(Seq("vector search")), scope = scope)) +
+      formatted(fresh.hydrationScan(Seq(1L, 2L), Seq(col("text")), scope))
     val pf = plan.linesIterator.filter(_.contains("PartitionFilters")).toSeq
     // two pruned scans: the index (chunk scoring) and the store (hydration)
     assert(pf.count(_.contains("source")) >= 2,
@@ -518,7 +520,9 @@ class PlanSpec extends SparkSpec {
     val eng = new Engine(spark, cfg)
     eng.ingest(spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text"))
     eng.update()
-    val plan = formatted(eng.hybridSearch(Seq("data processing pipeline")))
+    val qs = Seq("data processing pipeline")
+    // hybridSearch's two ranking frames, before their top-kPool cuts
+    val plan = formatted(eng.lexicalScores(qs)) + formatted(eng.vectorScores(eng.queryDf(qs)))
     // the postings scan must carry a tb PartitionFilter (at most nTerms of
     // the nBuckets directories are listed) — the round-9 weak item was a
     // full-store re-tokenization on every hybrid call

@@ -155,13 +155,17 @@ class VectorSpec extends SparkSpec {
     val persisted = loaded.search(queries, k = 4, nprobe = 8)
       .select("query_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(persisted == exact)
-    // pruned probe: the cell-partitioned scan must carry a dynamic
-    // partition-pruning filter (unprobed directories are never read)
+    // pruned probe: the cell-partitioned scan must carry the probed cells
+    // as a literal partition filter (unprobed directories are never read)
     val prunedDf = loaded.search(queries, k = 4, nprobe = 2)
     prunedDf.collect()
     val plan = prunedDf.queryExecution.executedPlan.toString
-    assert(plan.contains("dynamicpruning") || plan.contains("PartitionFilters: [isnotnull(cell"),
-      plan.take(2000))
+    val probed = queries.collect().flatMap(r => graft.functions.VectorFns.cellOrder(
+      r.getAs[Seq[Float]]("query_vec").map(_.toDouble).toArray, loaded.centroidArray).take(2)).toSet
+    val filters = "PartitionFilters: \\[[^\\]]*cell#\\d+ IN \\(([0-9, ]+)\\)".r
+      .findAllMatchIn(plan).map(_.group(1).split(",").map(_.trim.toInt).toSet).toSeq.distinct
+    assert(filters == Seq(probed), plan.take(2000))
+    assert(!plan.contains("dynamicpruning"), plan.take(2000))
   }
 
   test("range search: cell-bound pruning is exact AND actually prunes") {
